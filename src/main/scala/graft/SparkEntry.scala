@@ -401,13 +401,15 @@ object SparkEntry {
     // trade graph, so the loop runs to the maxIters=4 cap and the result
     // is bit-exact pageRank(4) — which the oracle replays as a fourth
     // unrolled integer round. Exercises the convergence machinery (r_old
-    // carry + delta aggregate); the every-4-rounds lineage truncation
-    // skips round 4 here (final round — nothing stacks on it), so the
-    // deeper checkpoint path is covered by GraphSpec's 5+-iteration runs.
+    // carry + delta aggregate). Up to sf0.1 the trade graph is under
+    // Graph.LocalLoopMaxRows, so the rounds run driver-local; GraphSpec's
+    // properties hold the distributed rounds (one eager checkpoint per
+    // round) bit-identical to them.
     "pagerank_until" -> ((s, d) => {
       val res = Graph.pageRankUntil(Graph.tradeEdges(s, d),
         epsMicro = 0L, maxIters = 4)
-      graft.plans.ReleaseRegistry.register("graph.pagerank_until")(res.release)
+      if (res.pinned)
+        graft.plans.ReleaseRegistry.register("graph.pagerank_until")(res.release)
       res.ranks
     }),
     // pairwise two-sample KS statistic over per-doc lengths (n_chars):

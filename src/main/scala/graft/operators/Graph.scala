@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.plans.{Checkpoints, ReleaseRegistry}
 
@@ -24,9 +25,17 @@ import graft.plans.{Checkpoints, ReleaseRegistry}
   * iteration's join reuses that layout while only the (much smaller) rank
   * table moves — and (2) one map-side-combined integer-sum shuffle on
   * `dst`. Dangling mass is a single scalar aggregate broadcast back.
-  * Uniform and weighted PageRank share ONE per-step persist loop
-  * ([[iterate]]) differing only in the contribution expression, so both
-  * inherit the same lineage-truncation and convergence discipline.
+  * Uniform and weighted PageRank and Katz share ONE loop ([[iterate]])
+  * differing only in the contribution expression: every round is one
+  * eager checkpoint job with constant-depth lineage, and all variants get
+  * the same convergence stop. Label propagation
+  * ([[labelPropagateReleasable]]) has the same round shape.
+  *
+  * Small graphs skip the per-round jobs: when the edge frame has at most
+  * [[LocalLoopMaxRows]] rows and integral, non-null ids, both loops
+  * collect it once and run every round on the driver over primitive
+  * arrays with the same integer recurrence, so the two paths return
+  * bit-identical frames (see [[iterate]]).
   *
   * Lifecycle: every public entry either returns a [[RankResult]] with
   * explicit release hooks or (the plain-`DataFrame` conveniences)
@@ -38,6 +47,20 @@ object Graph {
 
   /** One PageRank unit in micro-units. */
   val Unit_ : Long = 1000000L
+
+  /** Edge-frame row cap for the driver-local rounds of [[iterate]] and
+    * [[labelPropagateReleasable]]; above it the rounds run as distributed
+    * jobs. Set just above the largest graph measured on both paths: at
+    * sf0.1 (587k trade edges for pagerank, 2.39M doubled co-purchase edges
+    * for label propagation; 4 local cores, 7 GB heap) the local rounds
+    * were 1.3–2.2× faster in two back-to-back pairs of runs (median warm
+    * pagerank 4.7 / 3.7 s vs 9.6 / 6.2 s, label propagation 6.0 / 5.7 s vs
+    * 13.0 / 7.5 s), the JVM's peak heap was in the same range on both
+    * paths (the edge build dominates it), and the result held on the
+    * driver was about 1 MB. The collected columns
+    * are transient: 8 bytes per row and column, plus the dense-id arrays.
+    */
+  private[graft] val LocalLoopMaxRows: Long = 2500000L
 
   /** A rank computation's result: the rank frame, how many iterations
     * actually ran (== the requested count for [[pageRank]]; possibly fewer
@@ -58,9 +81,14 @@ object Graph {
     * release with [[graft.plans.ReleaseRegistry]] (invalidating tier), so
     * hosts that drain at materialization boundaries never leak it even if
     * they only ever call `release()`.
+    *
+    * `pinned` — false for a result of the driver-local rounds, which pins
+    * nothing: both hooks are no-ops, and the conveniences queue nothing
+    * for it.
     */
   final case class RankResult(ranks: DataFrame, itersRun: Int,
-      release: () => Unit, releaseAll: () => Unit = () => ())
+      release: () => Unit, releaseAll: () => Unit = () => (),
+      pinned: Boolean = true)
 
   /** PageRank over a directed edge list `(src, dst)` (strings; duplicate
     * edges are collapsed). Damping 0.85 as `dampNum/dampDen` integers.
@@ -68,15 +96,16 @@ object Graph {
     * initial rank is 1.0 per node, so ranks sum to ~n·10⁶ (minus
     * truncation dust).
     *
-    * The returned plan reads pinned frames (edge layout + final ranks);
-    * their release hook is queued with [[graft.plans.ReleaseRegistry]] —
-    * the session host drains it after materializing. Callers wanting
-    * manual control use [[pageRankReleasable]].
+    * When the rounds ran distributed, the returned plan reads pinned
+    * frames (edge layout + final ranks); their release hook is queued with
+    * [[graft.plans.ReleaseRegistry]] — the session host drains it after
+    * materializing. Callers wanting manual control use
+    * [[pageRankReleasable]].
     */
   def pageRank(edges: DataFrame, iters: Int = 3,
       dampNum: Long = 85L, dampDen: Long = 100L): DataFrame = {
     val res = pageRankReleasable(edges, iters, dampNum, dampDen)
-    ReleaseRegistry.register("graph.pagerank")(res.release)
+    if (res.pinned) ReleaseRegistry.register("graph.pagerank")(res.release)
     res.ranks
   }
 
@@ -85,11 +114,8 @@ object Graph {
     * always queues.
     */
   def pageRankReleasable(edges: DataFrame, iters: Int = 3,
-      dampNum: Long = 85L, dampDen: Long = 100L): RankResult = {
-    val e = prepareUniform(edges)
-    iterate(e, uniformContrib(e), iters, dampNum, dampDen,
-      stopDeltaMicro = -1L)
-  }
+      dampNum: Long = 85L, dampDen: Long = 100L): RankResult =
+    pageRankCore(edges, iters, dampNum, dampDen, stopDeltaMicro = -1L)
 
   /** Convergence-stopped PageRank: iterate until the total absolute rank
     * movement (Σ|r_i − r_{i-1}| in micro-units, an integer aggregate over
@@ -99,10 +125,18 @@ object Graph {
     * at iteration k returns exactly `pageRank(edges, k)`.
     */
   def pageRankUntil(edges: DataFrame, epsMicro: Long = 1000L,
-      maxIters: Int = 20, dampNum: Long = 85L, dampDen: Long = 100L): RankResult = {
-    val e = prepareUniform(edges)
-    iterate(e, uniformContrib(e), maxIters, dampNum, dampDen,
-      stopDeltaMicro = epsMicro)
+      maxIters: Int = 20, dampNum: Long = 85L, dampDen: Long = 100L): RankResult =
+    pageRankCore(edges, maxIters, dampNum, dampDen, stopDeltaMicro = epsMicro)
+
+  /** Uniform PageRank with the local-loop gate exposed (specs force
+    * either path with `localMaxRows` = `Long.MaxValue` / 0).
+    */
+  private[graft] def pageRankCore(edges: DataFrame, iters: Int,
+      dampNum: Long, dampDen: Long, stopDeltaMicro: Long,
+      localMaxRows: Long = LocalLoopMaxRows): RankResult = {
+    val (e, nEdges) = prepareUniform(edges)
+    iterate(e, nEdges, localMaxRows, uniformContrib(e), (r, od) => r / od,
+      iters, dampNum, dampDen, stopDeltaMicro)
   }
 
   /** Weighted PageRank: edge weights steer the rank flow — node `v`
@@ -120,12 +154,19 @@ object Graph {
     * Dangling mass (no out-edges) redistributes exactly as [[pageRank]].
     *
     * Runs through the SAME [[iterate]] loop as uniform PageRank (only the
-    * contribution expression differs), so it inherits the per-step
-    * persist + parent release, the every-4-rounds lineage truncation, and
-    * convergence support. Returns a [[RankResult]] with release hooks.
+    * contribution expression differs), so it inherits the one-job round
+    * with per-round lineage truncation, the convergence support and the
+    * driver-local path for small graphs. Returns a [[RankResult]] with
+    * release hooks.
     */
   def pageRankWeighted(edges: DataFrame, iters: Int = 3,
-      dampNum: Long = 85L, dampDen: Long = 100L): RankResult = {
+      dampNum: Long = 85L, dampDen: Long = 100L): RankResult =
+    pageRankWeightedCore(edges, iters, dampNum, dampDen)
+
+  /** [[pageRankWeighted]] with the local-loop gate exposed. */
+  private[graft] def pageRankWeightedCore(edges: DataFrame, iters: Int,
+      dampNum: Long, dampDen: Long,
+      localMaxRows: Long = LocalLoopMaxRows): RankResult = {
     // same exchange discipline as [[prepareUniform]]: the per-pair sum
     // stays FIRST (map-side combined over the raw stream), the `src`
     // layout sits directly on its output, and the out-weight aggregate +
@@ -139,11 +180,12 @@ object Graph {
       .select(col("src"), col("dst"),
         expr("(w * 1000000L) div sw").as("wn"))
       .persist()
-    e.count()
-    iterate(e,
+    val nEdges = e.count()
+    iterate(e, nEdges, localMaxRows,
       r => e.join(r, e("src") === r("node"))
         .select(col("dst").as("node"), expr("(r * wn) div 1000000L").as("c"))
         .groupBy("node").agg(sum("c").as("c")),
+      (r, wn) => Math.multiplyExact(r, wn) / 1000000L,
       iters, dampNum, dampDen, stopDeltaMicro = -1L)
   }
 
@@ -154,7 +196,7 @@ object Graph {
   def pageRankWeightedRanks(edges: DataFrame, iters: Int = 3,
       dampNum: Long = 85L, dampDen: Long = 100L): DataFrame = {
     val res = pageRankWeighted(edges, iters, dampNum, dampDen)
-    ReleaseRegistry.register("graph.pagerank_weighted")(res.release)
+    if (res.pinned) ReleaseRegistry.register("graph.pagerank_weighted")(res.release)
     res.ranks
   }
 
@@ -173,16 +215,19 @@ object Graph {
     * distinct stays FIRST (map-side combined) so the raw-edge pass
     * still shrinks before any shuffle — at 100 TB the raw pair stream
     * is orders of magnitude bigger than the deduped set.
+    *
+    * Returns the persisted frame and its row count (the barrier's value,
+    * which the local-loop gate reads).
     */
-  private def prepareUniform(edges: DataFrame): DataFrame = {
+  private def prepareUniform(edges: DataFrame): (DataFrame, Long) = {
     val dedup = edges.select(col("src"), col("dst")).distinct()
       .repartition(col("src")) // iteration joins reuse this layout
     val e = dedup
       .join(dedup.groupBy("src").agg(count(lit(1)).as("od")), "src")
       .select(col("src"), col("dst"), col("od"))
       .persist()
-    e.count() // barrier: materialize before the iteration chain re-reads
-    e
+    // barrier: materialize before the iteration chain re-reads
+    (e, e.count())
   }
 
   /** Uniform contribution: each node splits its rank equally over its
@@ -195,7 +240,177 @@ object Graph {
       .select(col("dst").as("node"), expr("r div od").as("c"))
       .groupBy("node").agg(sum("c").as("c"))
 
-  /** The shared per-step loop for every rank variant. Each iteration
+  /** The shared loop for every rank variant, with two paths chosen by a
+    * count gate (the `Dedup.resolveClustersReleasable` idiom).
+    *
+    * '''Driver-local path''' — `nEdges ≤ localMaxRows` and every column
+    * of `e` integral with no null. `nEdges` is the count barrier the prep
+    * already paid, so the gate adds no job. The edge frame is collected
+    * once ([[collectIntegral]]) and unpersisted, the ids are mapped to
+    * dense ints, and every round runs over primitive arrays with the same
+    * integer recurrence as the distributed rounds: `localContrib(r, aux)`
+    * per edge (`r div od`, `(r·wn) div 10⁶` or plain `r`, `aux` being the
+    * third column), the update `Unit_·(den−num) div den + (num·(c+share))
+    * div den`, the dangling share `Σr[dng] div nNodes` (skipped when
+    * `redistributeDangling` is false), and the stop `Σ|r−r_old| ≤
+    * stopDeltaMicro` with the same `itersRun`. Arithmetic is
+    * overflow-checked (`Math.*Exact`), so an overflowing input throws as
+    * Spark's ANSI arithmetic does on the distributed path instead of
+    * wrapping. The ranks come back as a one-partition frame with the same
+    * column names and types; the release hooks are no-ops and nothing is
+    * registered with [[graft.plans.ReleaseRegistry]] (`pinned` is false).
+    *
+    * '''Distributed path''' — everything else ([[iterateDistributed]]).
+    */
+  private def iterate(e: DataFrame, nEdges: Long, localMaxRows: Long,
+      contrib: DataFrame => DataFrame, localContrib: (Long, Long) => Long,
+      iters: Int, dampNum: Long, dampDen: Long, stopDeltaMicro: Long,
+      redistributeDangling: Boolean = true): RankResult =
+    collectIntegral(e, nEdges, localMaxRows) match {
+      case Some(cols) =>
+        // node column exactly as the distributed rank table types it
+        // (analysis only, no job)
+        val nodeField = e.select(col("src").as("node"))
+          .union(e.select(col("dst").as("node"))).schema.head
+        e.unpersist(blocking = false)
+        iterateLocal(e.sparkSession, cols, nodeField, localContrib, iters,
+          dampNum, dampDen, stopDeltaMicro, redistributeDangling)
+      case None =>
+        iterateDistributed(e, contrib, iters, dampNum, dampDen,
+          stopDeltaMicro, redistributeDangling)
+    }
+
+  /** `Unit_·(den−num) div den`, the rank update's constant term (shared by
+    * both paths; overflow-checked like the rest of the recurrence).
+    */
+  private def rankBase(dampNum: Long, dampDen: Long): Long =
+    Math.multiplyExact(Unit_, Math.subtractExact(dampDen, dampNum)) / dampDen
+
+  /** The persisted edge frame as one primitive array per column, gathered
+    * by one collect job — or `None` when the frame has more than
+    * `maxRows` rows, a non-integral column or a null, the inputs the
+    * distributed loops keep. `nRows` is the frame's already-paid count.
+    */
+  private def collectIntegral(e: DataFrame, nRows: Long,
+      maxRows: Long): Option[Array[Array[Long]]] = {
+    val integral = e.schema.forall(_.dataType match {
+      case LongType | IntegerType | ShortType | ByteType => true
+      case _ => false
+    })
+    if (nRows > maxRows || !integral) return None
+    val w = e.schema.length
+    val parts = e.select(e.columns.map(c => col(c).cast(LongType)).toSeq: _*)
+      .queryExecution.toRdd.mapPartitions { it =>
+        val out = Array.fill(w)(new scala.collection.mutable.ArrayBuilder.ofLong)
+        var hasNull = false
+        while (!hasNull && it.hasNext) {
+          val row = it.next()
+          var j = 0
+          while (j < w) {
+            if (row.isNullAt(j)) hasNull = true else out(j) += row.getLong(j)
+            j += 1
+          }
+        }
+        Iterator.single(if (hasNull) null else out.map(_.result()))
+      }.collect()
+    if (parts.contains(null)) None
+    else Some(Array.tabulate(w)(j => parts.flatMap(_(j))))
+  }
+
+  /** Sorted distinct ids of `a ++ b`, and each endpoint's index among them.
+    * The dense ids are monotone in the original ids, so a minimum over
+    * dense ids is the minimum over the original ones.
+    */
+  private def denseIds(a: Array[Long],
+      b: Array[Long]): (Array[Long], Array[Int], Array[Int]) = {
+    val all = new Array[Long](a.length + b.length)
+    System.arraycopy(a, 0, all, 0, a.length)
+    System.arraycopy(b, 0, all, a.length, b.length)
+    java.util.Arrays.sort(all)
+    var n = 0
+    for (v <- all) if (n == 0 || all(n - 1) != v) { all(n) = v; n += 1 }
+    val ids = java.util.Arrays.copyOf(all, n)
+    def index(x: Array[Long]) = x.map(v => java.util.Arrays.binarySearch(ids, v))
+    (ids, index(a), index(b))
+  }
+
+  /** A driver-local loop's result as a one-partition frame: row `v` is
+    * `(a(v), b(v))`, each value in its schema column's integral type. The
+    * partition holds the two primitive arrays, not boxed rows (16 bytes a
+    * node on the driver and in each task), and rows are built in the task.
+    */
+  private def oneTaskFrame(spark: SparkSession, schema: StructType,
+      a: Array[Long], b: Array[Long]): DataFrame = {
+    val (ta, tb) = (schema(0).dataType, schema(1).dataType)
+    val rows = spark.sparkContext.parallelize(Seq((a, b)), 1).flatMap {
+      case (a, b) =>
+        a.indices.iterator.map(v => Row(idValue(ta, a(v)), idValue(tb, b(v))))
+    }
+    spark.createDataFrame(rows, schema)
+  }
+
+  /** An id held as Long, back in its column's integral type. */
+  private def idValue(t: DataType, v: Long): Any = t match {
+    case IntegerType => v.toInt
+    case ShortType => v.toShort
+    case ByteType => v.toByte
+    case _ => v
+  }
+
+  /** [[iterate]]'s driver-local rounds over `cols` = `(src, dst[, aux])`. */
+  private def iterateLocal(spark: SparkSession, cols: Array[Array[Long]],
+      nodeField: StructField, contrib: (Long, Long) => Long, iters: Int,
+      dampNum: Long, dampDen: Long, stopDeltaMicro: Long,
+      redistributeDangling: Boolean): RankResult = {
+    val (ids, src, dst) = denseIds(cols(0), cols(1))
+    val aux = if (cols.length > 2) cols(2) else new Array[Long](src.length)
+    val n = ids.length
+    val dng = Array.fill(n)(true)
+    src.foreach(v => dng(v) = false)
+    def dangMass(r: Array[Long]): Long = {
+      var m = 0L
+      var v = 0
+      while (v < n) { if (dng(v)) m = Math.addExact(m, r(v)); v += 1 }
+      m
+    }
+    val base = rankBase(dampNum, dampDen)
+    var r = Array.fill(n)(Unit_)
+    var i = 0
+    var converged = false
+    while (i < iters && !converged) {
+      i += 1
+      val share = if (!redistributeDangling || n == 0) 0L else dangMass(r) / n
+      val c = new Array[Long](n)
+      var k = 0
+      while (k < src.length) {
+        c(dst(k)) = Math.addExact(c(dst(k)), contrib(r(src(k)), aux(k)))
+        k += 1
+      }
+      val next = new Array[Long](n)
+      var v = 0
+      while (v < n) {
+        next(v) = Math.addExact(base,
+          Math.multiplyExact(dampNum, Math.addExact(c(v), share)) / dampDen)
+        v += 1
+      }
+      if (stopDeltaMicro >= 0L) {
+        var delta = 0L
+        v = 0
+        while (v < n) {
+          delta = Math.addExact(delta,
+            Math.absExact(Math.subtractExact(next(v), r(v))))
+          v += 1
+        }
+        converged = delta <= stopDeltaMicro
+      }
+      r = next
+    }
+    val ranks = oneTaskFrame(spark,
+      StructType(Seq(nodeField, StructField("rank_micro", LongType))), ids, r)
+    RankResult(ranks, i, () => (), pinned = false)
+  }
+
+  /** [[iterate]]'s distributed rounds. Each iteration
     * reads the previous rank table up to three times (edge join, dangling
     * scan, node-preserving left join) — composed lazily that triples the
     * lineage per step (27x the base subtree at 3 iterations). Materialize
@@ -221,9 +436,10 @@ object Graph {
     * `stopDeltaMicro < 0` disables the convergence check (fixed-iteration
     * mode pays no delta aggregate).
     */
-  private def iterate(e: DataFrame, contrib: DataFrame => DataFrame,
-      iters: Int, dampNum: Long, dampDen: Long,
-      stopDeltaMicro: Long, redistributeDangling: Boolean = true): RankResult = {
+  private def iterateDistributed(e: DataFrame,
+      contrib: DataFrame => DataFrame, iters: Int, dampNum: Long,
+      dampDen: Long, stopDeltaMicro: Long,
+      redistributeDangling: Boolean): RankResult = {
     import org.apache.spark.sql.graft.CheckpointHandle
     // whether a node dangles (no out-edges) never changes — resolve it
     // ONCE as a flag carried on the rank table, so each iteration's
@@ -266,7 +482,7 @@ object Graph {
       val stepped = r.select(col("node"), col("dng"), col("r").as("r_old"))
         .join(ct, Seq("node"), "left")
         .select(col("node"), col("dng"), col("r_old"),
-          (lit(Unit_ * (dampDen - dampNum) / dampDen) +
+          (lit(rankBase(dampNum, dampDen)) +
             expr(s"($dampNum * (coalesce(c, 0L) + $share)) div $dampDen"))
             .as("r"))
       // ONE job materializes the round into constant-depth checkpoint
@@ -325,13 +541,13 @@ object Graph {
   /** Edge prep without the out-degree column (Katz's contribution is an
     * UNNORMALIZED in-neighbor sum — pre-joining a degree nobody reads
     * would pay an aggregate + join at prep for nothing): dedup, lay out
-    * on `src` once, persist.
+    * on `src` once, persist. Returns the frame and its row count.
     */
-  private def preparePlain(edges: DataFrame): DataFrame = {
+  private def preparePlain(edges: DataFrame): (DataFrame, Long) = {
     val e = edges.select(col("src"), col("dst")).distinct()
       .repartition(col("src")).persist()
-    e.count() // barrier: materialize before the iteration chain re-reads
-    e
+    // barrier: materialize before the iteration chain re-reads
+    (e, e.count())
   }
 
   /** Unnormalized contribution: each in-neighbor donates its full score
@@ -356,19 +572,27 @@ object Graph {
     *
     * Scale shape: identical to [[pageRank]] — the shared [[iterate]]
     * loop (edges partitioned+persisted once, rank table the only moving
-    * state, per-round persist + lineage truncation), minus the one
-    * dangling-mass job per round the `redistributeDangling=false` switch
-    * removes.
+    * state, one eager-checkpoint job per round, driver-local rounds for
+    * small graphs), minus the one dangling-mass job per round the
+    * `redistributeDangling=false` switch removes.
     */
   def katzCentrality(edges: DataFrame, iters: Int = 3,
       alphaNum: Long = 20L, alphaDen: Long = 100L): DataFrame = {
+    val res = katzCore(edges, iters, alphaNum, alphaDen)
+    if (res.pinned) ReleaseRegistry.register("graph.katz")(res.release)
+    res.ranks.select(col("node"), col("rank_micro").as("katz_micro"))
+  }
+
+  /** [[katzCentrality]]'s loop with the local-loop gate exposed; the
+    * scores are in `rank_micro`.
+    */
+  private[graft] def katzCore(edges: DataFrame, iters: Int, alphaNum: Long,
+      alphaDen: Long, localMaxRows: Long = LocalLoopMaxRows): RankResult = {
     require(alphaNum > 0 && alphaNum < alphaDen,
       s"katz: need 0 < alpha < 1, got $alphaNum/$alphaDen")
-    val e = preparePlain(edges)
-    val res = iterate(e, plainContrib(e), iters, alphaNum, alphaDen,
-      stopDeltaMicro = -1L, redistributeDangling = false)
-    ReleaseRegistry.register("graph.katz")(res.release)
-    res.ranks.select(col("node"), col("rank_micro").as("katz_micro"))
+    val (e, nEdges) = preparePlain(edges)
+    iterate(e, nEdges, localMaxRows, plainContrib(e), (r, _) => r, iters,
+      alphaNum, alphaDen, stopDeltaMicro = -1L, redistributeDangling = false)
   }
 
   /** Bounded-round HITS (hubs & authorities) in integer micro-units:
@@ -393,7 +617,7 @@ object Graph {
   def hits(edges: DataFrame, iters: Int = 2): DataFrame = {
     import org.apache.spark.sql.graft.CheckpointHandle
     require(iters >= 1, s"hits: iters must be >= 1, got $iters")
-    val e = preparePlain(edges)
+    val (e, _) = preparePlain(edges)
     // loop-invariant role cardinalities (driver scalars, like nNodes in
     // the rank loops)
     val nHub = e.select("src").distinct().count()
@@ -520,14 +744,15 @@ object Graph {
     *
     * Scale shape: the doubled edge list is partitioned once on the probe
     * side and persisted; each round is one equi-join (labels move, edges
-    * don't) plus one map-side-combined min aggregate, with the per-step
-    * persist + parent-release discipline of [[pageRank]]. Label table is
-    * |nodes| rows × 2 ints — the only moving state. The final label
-    * cache's release hook is queued with the registry.
+    * don't) plus one map-side-combined min aggregate, materialized in one
+    * eager-checkpoint job as in [[pageRank]]'s loop. Label table is
+    * |nodes| rows × 2 ints — the only moving state. Small graphs run the
+    * rounds on the driver instead ([[labelPropagateReleasable]]). The
+    * final label cache's release hook is queued with the registry.
     */
   def labelPropagate(edges: DataFrame, iters: Int = 3): DataFrame = {
-    val (labels, release) = labelPropagateReleasable(edges, iters)
-    ReleaseRegistry.register("graph.label_prop")(release)
+    val (labels, release) = labelPropagateCore(edges, iters)
+    release.foreach(ReleaseRegistry.register("graph.label_prop"))
     labels
   }
 
@@ -535,9 +760,26 @@ object Graph {
     * returned plan pins (the [[pageRankReleasable]] contract: call after
     * materializing; lineage stays intact, so a later recompute is slow
     * but correct).
+    *
+    * Same count gate as [[iterate]]: when the doubled edge frame has at
+    * most [[LocalLoopMaxRows]] rows of integral, non-null ids, its
+    * `e.count()` barrier decides, the frame is collected once and
+    * unpersisted, and the min-label rounds run on the driver over dense
+    * int ids (monotone in the original ids, so the minima agree). The
+    * labels come back as a one-partition frame with the distributed
+    * path's column names and types, and the hook is a no-op.
     */
   def labelPropagateReleasable(edges: DataFrame,
       iters: Int = 3): (DataFrame, () => Unit) = {
+    val (labels, release) = labelPropagateCore(edges, iters)
+    (labels, release.getOrElse(() => ()))
+  }
+
+  /** [[labelPropagateReleasable]] with the local-loop gate exposed; the
+    * hook is `None` when the rounds ran driver-local and nothing is pinned.
+    */
+  private[graft] def labelPropagateCore(edges: DataFrame, iters: Int,
+      localMaxRows: Long = LocalLoopMaxRows): (DataFrame, Option[() => Unit]) = {
     val und = edges
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
@@ -545,7 +787,36 @@ object Graph {
     val e = und.unionAll(und.select(col("b").as("a"), col("a").as("b")))
       .repartition(col("b")) // the label join probes on b each round
       .persist()
-    e.count()
+    collectIntegral(e, e.count(), localMaxRows) match {
+      case Some(Array(a, b)) =>
+        val nodeField = e.schema("a").copy(name = "node")
+        e.unpersist(blocking = false)
+        val (ids, ai, bi) = denseIds(a, b)
+        var label = Array.range(0, ids.length)
+        for (_ <- 0 until iters) {
+          val next = label.clone()
+          var k = 0
+          while (k < ai.length) {
+            if (label(bi(k)) < next(ai(k))) next(ai(k)) = label(bi(k))
+            k += 1
+          }
+          label = next
+        }
+        (oneTaskFrame(e.sparkSession,
+          StructType(Seq(nodeField, nodeField.copy(name = "label"))),
+          ids, label.map(v => ids(v))),
+          None)
+      case _ =>
+        val (labels, release) = labelPropagateDistributed(e, iters)
+        (labels, Some(release))
+    }
+  }
+
+  /** [[labelPropagateCore]]'s distributed rounds over the persisted,
+    * counted doubled edge frame `e`.
+    */
+  private def labelPropagateDistributed(e: DataFrame,
+      iters: Int): (DataFrame, () => Unit) = {
     var labels = e.select(col("a").as("node")).distinct()
       .select(col("node"), col("node").as("label")).persist()
     labels.count()
@@ -597,14 +868,19 @@ object Graph {
     * invocations cannot accumulate label caches no matter how the caller
     * uses the returned frame.
     */
-  def communities(edges: DataFrame, iters: Int = 3): DataFrame = {
-    val (labels, releaseLabels) = labelPropagateReleasable(edges, iters)
+  def communities(edges: DataFrame, iters: Int = 3): DataFrame =
+    communitiesCore(edges, iters)
+
+  /** [[communities]] with the local-loop gate exposed. */
+  private[graft] def communitiesCore(edges: DataFrame, iters: Int,
+      localMaxRows: Long = LocalLoopMaxRows): DataFrame = {
+    val (labels, releaseLabels) = labelPropagateCore(edges, iters, localMaxRows)
     val rollup = labels.groupBy(col("label").as("community"))
       .agg(count(lit(1)).as("n_members"), min("node").as("min_node"),
         max("node").as("max_node"))
       .persist()
     try rollup.count() // materialize BEFORE dropping the label cache
-    finally releaseLabels()
+    finally releaseLabels.foreach(_())
     ReleaseRegistry.register("graph.communities")(
       () => rollup.unpersist(blocking = false))
     rollup
@@ -1327,7 +1603,7 @@ object Graph {
     import org.apache.spark.sql.graft.CheckpointHandle
     require(nSeeds > 0,
       s"personalizedPageRank: nSeeds must be positive, got $nSeeds")
-    val e = prepareUniform(edges)
+    val (e, _) = prepareUniform(edges)
     val contrib = uniformContrib(e)
     val srcs = e.select(col("src")).distinct()
     val nodes = e.select(col("src").as("node"))

@@ -201,9 +201,11 @@ class GraphSpec extends SparkSpec {
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("src", "dst")
     val before = spark.sparkContext.getPersistentRDDs.keySet
     graft.plans.ReleaseRegistry.drain()
-    val (labels, release) = Graph.labelPropagateReleasable(edges, iters = 2)
+    // gate 0 forces the distributed loop, whose pinned state is under test
+    val (labels, release) = Graph.labelPropagateCore(edges, iters = 2,
+      localMaxRows = 0L)
     assert(labels.count() === 5)
-    release()
+    release.get.apply()
     // release() keeps only the intermediate lineage-truncation checkpoint
     // (queued with the registry's invalidating tier); drain clears it
     val afterRelease = spark.sparkContext.getPersistentRDDs.keySet -- before
@@ -271,7 +273,8 @@ class GraphSpec extends SparkSpec {
     // path 1-2-3-4 (community 1, 4 members) + pair 10-11 (community 10)
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("src", "dst")
     val before = spark.sparkContext.getPersistentRDDs.size
-    val got = Graph.communities(edges, iters = 3)
+    // gate 0 forces the distributed propagation and its checkpoint
+    val got = Graph.communitiesCore(edges, iters = 3, localMaxRows = 0L)
       .select("community", "n_members", "min_node", "max_node")
       .as[(Long, Long, Long, Long)].collect().toSet
     assert(got === Set((1L, 4L, 1L, 4L), (10L, 2L, 10L, 11L)))
@@ -541,5 +544,198 @@ class GraphSpec extends SparkSpec {
     def leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     while (leaked.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
     assert(leaked.isEmpty, s"bfsLevels left RDDs pinned: $leaked")
+  }
+
+  // ---- driver-local rounds vs distributed rounds ----
+
+  /** A generated edge list: `(src, dst, w)` rows over ≤ 30 node ids. */
+  private type Edges = Seq[(Long, Long, Long)]
+
+  /** Random integral graphs: ids from four bands (small, negative, just
+    * above 2³¹, near 3·2³²), duplicate edges and self-loops mixed in, and
+    * in half the draws a bipartite shape whose dst side never has an
+    * out-edge (all-dangling, like the trade graph). One draw in eight is
+    * the empty graph.
+    */
+  private val genEdges: org.scalacheck.Gen[Edges] = {
+    import org.scalacheck.Gen
+    val id = Gen.oneOf(Gen.choose(0L, 40L), Gen.choose(-40L, -1L),
+      Gen.choose(1L << 31, (1L << 31) + 40L),
+      Gen.choose(3L << 32, (3L << 32) + 40L))
+    val nonEmpty = for {
+      k <- Gen.choose(1, 30)
+      nodes <- Gen.listOfN(k, id).map(_.distinct)
+      bipartite <- Gen.oneOf(true, false)
+      (srcs, dsts) = if (bipartite && nodes.size > 1) nodes.splitAt(nodes.size / 2)
+        else (nodes, nodes)
+      m <- Gen.choose(1, 40)
+      edges <- Gen.listOfN(m, for {
+        s <- Gen.oneOf(srcs); d <- Gen.oneOf(dsts); w <- Gen.choose(1L, 9L)
+      } yield (s, d, w))
+      dups <- Gen.someOf(edges)
+      loops <- if (bipartite) Gen.const(Nil)
+        else Gen.someOf(nodes.take(3)).map(_.map(v => (v, v, 1L)))
+    } yield edges ++ dups ++ loops
+    Gen.frequency(1 -> Gen.const(Nil), 7 -> nonEmpty)
+  }
+
+  /** Which of the shapes the property must cover a graph has. Min-label
+    * tie: a node with two neighbors that carry the same label after one
+    * round, so round two compares equal minima.
+    */
+  private def shapes(g: Edges): Set[String] = {
+    val und = g.collect { case (s, d, _) if s != d => (s min d, s max d) }.distinct
+    val nbrs = (und ++ und.map(_.swap)).groupBy(_._1).map { case (v, es) => v -> es.map(_._2) }
+    val label1 = nbrs.map { case (v, ns) => v -> (v +: ns).min }
+    val ids = g.flatMap(e => Seq(e._1, e._2))
+    Set(
+      "empty" -> g.isEmpty,
+      "self-loop" -> g.exists(e => e._1 == e._2),
+      "duplicate" -> (g.map(e => (e._1, e._2)).distinct.size < g.size),
+      "all-dangling side" -> (g.nonEmpty &&
+        g.map(_._1).toSet.intersect(g.map(_._2).toSet).isEmpty),
+      "negative id" -> ids.exists(_ < 0L),
+      "id above 2^31" -> ids.exists(_ > (1L << 31)),
+      "min-label tie" -> nbrs.values.exists(ns =>
+        ns.map(label1).groupBy(identity).values.exists(_.size > 1))
+    ).collect { case (name, true) => name }
+  }
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(_.toSeq).sortBy(_.mkString(",")).toSeq
+  private def typesOf(df: org.apache.spark.sql.DataFrame) =
+    df.schema.map(f => (f.name, f.dataType))
+
+  /** `cases` generated graphs (fixed seed, no shrinking; together they
+    * must show every shape [[shapes]] names): the loop run with
+    * the gate forced open (`Long.MaxValue`, driver-local rounds) and shut
+    * (0, distributed rounds) must return bit-identical frames — same
+    * column names and types, same rows — and the same rounds-run count.
+    * `run(edges, gate)` returns (frame, rounds run, release-all hook).
+    */
+  private def bothPathsAgree(cases: Int)(
+      run: (Edges, Long) => (org.apache.spark.sql.DataFrame, Int, () => Unit)): Unit = {
+    import org.scalacheck.{Prop, Test => Check}
+    import org.scalacheck.rng.Seed
+    val seen = scala.collection.mutable.Set.empty[String]
+    val prop = Prop.forAllNoShrink(genEdges) { g =>
+      seen ++= shapes(g)
+      val (lf, li, lrel) = run(g, Long.MaxValue)
+      val (df, di, drel) = run(g, 0L)
+      val (lRows, dRows) = (rowsOf(lf), rowsOf(df))
+      val ok = li == di && typesOf(lf) == typesOf(df) && lRows == dRows
+      lrel(); drel()
+      graft.plans.ReleaseRegistry.drain()
+      Prop(ok) :| s"edges=$g\nlocal ($li rounds, ${typesOf(lf)}): $lRows\n" +
+        s"distributed ($di rounds, ${typesOf(df)}): $dRows"
+    }
+    val res = Check.check(Check.Parameters.default.withMinSuccessfulTests(cases)
+      .withInitialSeed(Seed(20261018L)).withWorkers(1), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+    assert(seen.toSet === Set("empty", "self-loop", "duplicate",
+      "all-dangling side", "negative id", "id above 2^31", "min-label tie"),
+      "generated graphs missed a required shape")
+  }
+
+  private def plainEdges(g: Edges) = g.map(e => (e._1, e._2)).toDF("src", "dst")
+
+  private def rank(r: Graph.RankResult) = (r.ranks, r.itersRun, r.releaseAll)
+
+  // each case runs both paths (~1.2 s of small Spark jobs), so four cases
+  // hold the six properties near 30 s; truncating integer division can
+  // absorb a small error in a single case (a katz contribution off by one
+  // passed the first three cases at this seed and failed the fourth)
+  private val PropertyCases = 4
+
+  test("local vs distributed: pageRank is bit-identical on random graphs") {
+    bothPathsAgree(PropertyCases) { (g, gate) =>
+      rank(Graph.pageRankCore(plainEdges(g), 3, 85L, 100L, -1L, gate))
+    }
+  }
+
+  test("local vs distributed: pageRankUntil(epsMicro = 0) is bit-identical") {
+    bothPathsAgree(PropertyCases) { (g, gate) =>
+      rank(Graph.pageRankCore(plainEdges(g), 4, 85L, 100L, 0L, gate))
+    }
+  }
+
+  test("local vs distributed: pageRankUntil(epsMicro > 0) stops at the same round") {
+    bothPathsAgree(PropertyCases) { (g, gate) =>
+      rank(Graph.pageRankCore(plainEdges(g), 6, 85L, 100L, 20000L, gate))
+    }
+  }
+
+  test("local vs distributed: pageRankWeighted is bit-identical") {
+    bothPathsAgree(PropertyCases) { (g, gate) =>
+      rank(Graph.pageRankWeightedCore(g.toDF("src", "dst", "w"), 3, 85L,
+        100L, gate))
+    }
+  }
+
+  test("local vs distributed: katzCentrality is bit-identical") {
+    bothPathsAgree(PropertyCases) { (g, gate) =>
+      rank(Graph.katzCore(plainEdges(g), 3, 20L, 100L, gate))
+    }
+  }
+
+  test("local vs distributed: labelPropagate is bit-identical") {
+    bothPathsAgree(PropertyCases) { (g, gate) =>
+      val (labels, release) = Graph.labelPropagateCore(plainEdges(g), 3, gate)
+      (labels, 3, release.getOrElse(() => ()))
+    }
+  }
+
+  test("local loops pin nothing: persisted RDDs and the registry stay at baseline") {
+    import graft.plans.ReleaseRegistry
+    ReleaseRegistry.drain()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    def leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    def awaitBaseline(what: String): Unit = {
+      // the collected edge frame unpersists with blocking = false
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (leaked.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(leaked.isEmpty, s"$what left RDDs pinned: $leaked")
+    }
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (10L, 11L))
+      .toDF("src", "dst")
+    val wedges = edges.withColumn("w", $"src" + 1L)
+    // the loops and their conveniences, built and materialized: nothing
+    // pinned, nothing queued
+    val results = Seq(
+      Graph.pageRankCore(edges, 3, 85L, 100L, -1L),
+      Graph.pageRankCore(edges, 5, 85L, 100L, 0L),
+      Graph.pageRankWeightedCore(wedges, 3, 85L, 100L),
+      Graph.katzCore(edges, 3, 20L, 100L))
+    results.foreach(r => assert(r.ranks.count() === 6L))
+    val (labels, _) = Graph.labelPropagateCore(edges, 3)
+    assert(labels.count() === 6L)
+    assert(Graph.pageRank(edges).count() === 6L)
+    assert(Graph.pageRankWeightedRanks(wedges).count() === 6L)
+    assert(Graph.katzCentrality(edges).count() === 6L)
+    assert(Graph.labelPropagate(edges).count() === 6L)
+    awaitBaseline("the local loops")
+    assert(ReleaseRegistry.pending === 0)
+    // the community rollups pin their own small results until a drain
+    assert(Graph.communities(edges).count() === 2L)
+    assert(Graph.modularity(edges).count() === 2L)
+    ReleaseRegistry.drain()
+    awaitBaseline("the rollups after drain")
+    assert(ReleaseRegistry.pending === 0)
+  }
+
+  test("rank loops: an overflowing recurrence fails loudly on both paths") {
+    // base = 10⁶·1 div (10¹³+1) = 0, but 10¹³ · (10⁶ contribution) > 2⁶³:
+    // the local kernel's Math.multiplyExact and Spark's ANSI multiply must
+    // both throw instead of wrapping
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
+    for (gate <- Seq(Long.MaxValue, 0L)) {
+      val err = intercept[Exception] {
+        Graph.pageRankCore(edges, 3, 10000000000000L, 10000000000001L, -1L,
+          gate).ranks.collect()
+      }
+      val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(_.isInstanceOf[ArithmeticException]),
+        s"gate $gate: expected an arithmetic overflow, got $err")
+    }
   }
 }

@@ -77,16 +77,29 @@ class ReleaseRegistrySpec extends SparkSpec {
     val edges = Seq(("S1", "C1"), ("S1", "C2"), ("S2", "C1")).toDF("src", "dst")
     val wedges = Seq(("S1", "C1", 3L), ("S1", "C2", 1L), ("S2", "C1", 2L))
       .toDF("src", "dst", "w")
+    // integral ids: the conveniences take the driver-local loops
+    val idEdges = Seq((1L, 11L), (1L, 12L), (2L, 11L)).toDF("src", "dst")
     val docs = (1L to 30L).toDF("doc_id")
     val pairs = (1L to 10L).map(i => (i, i + 10L)).toDF("a", "b")
     val baseline = pinnedCount
     (1 to 20).foreach { round =>
+      // string ids: the distributed loops
       Graph.pageRank(edges, iters = 3).count()
       Graph.pageRankWeightedRanks(wedges, iters = 3).count()
       Graph.labelPropagate(edges, iters = 2).count()
       Graph.communities(edges).count()
+      // integral ids: the driver-local loops, which pin nothing, in every
+      // fourth round (each call pays its ~0.8 s edge prep)
+      if (round % 4 == 1) {
+        Graph.pageRank(idEdges, iters = 3).count()
+        Graph.labelPropagate(idEdges, iters = 2).count()
+      }
       Dedup.resolveClusters(docs, pairs).count()
       assert(ReleaseRegistry.pending > 0, "wrappers queued no hooks")
+      val queued = ReleaseRegistry.pendingLabels.toSet
+      assert(Set("graph.pagerank", "graph.pagerank_weighted",
+        "graph.label_prop", "graph.communities").subsetOf(queued),
+        s"distributed wrappers queued only $queued")
       ReleaseRegistry.drain()
       assertBaselineEventually(baseline, s"round $round")
       assert(ReleaseRegistry.pending === 0)
