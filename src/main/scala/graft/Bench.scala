@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
@@ -63,6 +65,13 @@ object Bench {
         case _ => Seq.empty
       }
     }.toMap
+  }
+
+  /** A failure as an artifact field: `{"error":"<class>: <message>"}`. */
+  private[graft] def errorJson(t: Throwable): String = {
+    import org.json4s._
+    org.json4s.jackson.JsonMethods.compact(
+      JObject("error" -> JString(s"${t.getClass.getName}: ${t.getMessage}")))
   }
 
   /** The core count the committed artifact was measured at (its
@@ -476,7 +485,7 @@ object Bench {
       val liRows = Tables.lineitem(spark, sfDir).count()
       val docRows = Tables.documents(spark, sfDir).count()
       s"""{"cooc_edges":$coocEdges,"lineitem_rows":$liRows,"document_rows":$docRows}"""
-    } catch { case _: Throwable => "{}" }
+    } catch { case NonFatal(t) => errorJson(t) }
     finally graft.plans.ReleaseRegistry.drain()
 
     val failed = results.collect { case (k, v) if v.isNaN => k }
@@ -503,12 +512,16 @@ object Bench {
     // writes to a _degraded sidecar instead: its single-cold-run medians
     // must not become the next round's regression baseline.
     println(full)
-    if (only.isEmpty) try {
+    if (only.isEmpty) {
       val p = java.nio.file.Paths.get(
         if (timedOut) "tools/bench_full_degraded.json" else "tools/bench_full.json")
-      java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.write(p, full.getBytes("UTF-8"))
-    } catch { case _: Throwable => }
+      try {
+        java.nio.file.Files.createDirectories(p.getParent)
+        java.nio.file.Files.write(p, full.getBytes("UTF-8"))
+      } catch {
+        case NonFatal(t) => System.err.println(s"BENCH: artifact write to $p failed: $t")
+      }
+    }
     // LAST line: compact and guaranteed to fit a 2000-char tail capture —
     // headline total + the slowest queries + pointer to the full artifact
     // Locale.ROOT: the f-interpolator honors the JVM default locale, and a

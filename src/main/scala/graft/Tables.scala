@@ -1,8 +1,11 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Typed-table loaders over the driver fixtures (FIXTURES.md).
   *
@@ -12,14 +15,90 @@ import org.apache.spark.sql.types.LongType
   * with real schemas — placement, locality and caching are delegated to the
   * storage layer + Spark. `spark.read.parquet` subsumes the reference's S1-S4
   * scan/ingest operators (SURVEY.md §2.1).
+  *
+  * '''Schema cache.''' `spark.read.parquet` infers a schema by reading
+  * footers in a one-task Spark job, and every query build used to pay that
+  * job again for every table it reads. [[load]] infers a table's schema
+  * once and hands it to later reads (`spark.read.schema(s).parquet(path)`:
+  * still a fresh relation with fresh attribute ids, so self-joins work).
+  * An entry is keyed by
+  *  - the qualified path;
+  *  - the file version: `(length, modificationTime)` of a single file, or
+  *    the sorted `(path, length, modificationTime)` of every file under a
+  *    directory (Spark names part files anew on every overwrite, so a
+  *    rewrite changes the key);
+  *  - the session confs the inferred schema depends on: the ones
+  *    `ParquetToSparkSchemaConverter(SQLConf)` reads, plus schema merging
+  *    and summary files, which `ParquetUtils.inferSchema` reads.
+  *
+  * When any part of the key changes, the next load infers again and
+  * replaces the path's entry, so the cache holds one entry per distinct
+  * path. A path that cannot be statted (missing, a glob) is read uncached
+  * and fails exactly as `spark.read.parquet` does.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** What an inferred schema depends on besides its path. */
+  private case class SchemaKey(version: Seq[(String, Long, Long)],
+      confs: Seq[Boolean])
+
+  /** qualified path → (the key its schema was inferred under, schema) */
+  private val schemas = new ConcurrentHashMap[String, (SchemaKey, StructType)]()
+
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fileVersion(fs, p) match {
+      case None => spark.read.parquet(path)
+      case Some(version) =>
+        val qualified = fs.makeQualified(p).toString
+        // taken before inferring: a rewrite racing the inference leaves
+        // the entry under the old version, so the next load infers again
+        val key = SchemaKey(version, inferenceConfs(spark))
+        Option(schemas.get(qualified)) match {
+          case Some((k, schema)) if k == key => spark.read.schema(schema).parquet(path)
+          case _ =>
+            val df = spark.read.parquet(path)
+            schemas.put(qualified, (key, df.schema))
+            df
+        }
+    }
+  }
+
+  /** `None` when `p` cannot be statted. */
+  private def fileVersion(fs: FileSystem, p: Path): Option[Seq[(String, Long, Long)]] =
+    try {
+      val st = fs.getFileStatus(p)
+      if (!st.isDirectory) Some(Seq(("", st.getLen, st.getModificationTime)))
+      else {
+        val it = fs.listFiles(p, true)
+        val files = Seq.newBuilder[(String, Long, Long)]
+        while (it.hasNext) {
+          val f = it.next()
+          files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+        }
+        Some(files.result().sorted)
+      }
+    } catch { case _: java.io.IOException => None }
+
+  /** The session confs a parquet schema's inference reads: those of the
+    * `ParquetToSparkSchemaConverter(SQLConf)` constructor (Spark 4.1), in
+    * its order, then `ParquetUtils.inferSchema`'s schema-merging and
+    * summary-file switches.
+    */
+  private def inferenceConfs(spark: SparkSession): Seq[Boolean] = {
+    val c = spark.sessionState.conf
+    Seq(c.isParquetBinaryAsString, c.isParquetINT96AsTimestamp,
+      c.caseSensitiveAnalysis, c.parquetInferTimestampNTZEnabled,
+      c.legacyParquetNanosAsLong, c.parquetFieldIdReadEnabled,
+      c.parquetIgnoreVariantAnnotation,
+      c.parquetReaderRespectUnknownTypeAnnotation,
+      c.isParquetSchemaMergingEnabled, c.isParquetSchemaRespectSummaries)
+  }
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")

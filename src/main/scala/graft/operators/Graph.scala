@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import scala.util.control.NonFatal
+
 import graft.plans.{Checkpoints, ReleaseRegistry}
 
 /** Graph analytics over relational edge lists — PageRank as the flagship
@@ -454,8 +456,7 @@ object Graph {
       .join(srcs.as("s"), col("n.node") === col("s.src"), "left")
       .select(col("n.node").as("node"), col("s.src").isNull.as("dng"))
       .persist()
-    val nNodes = nodesF.count() // barrier + the loop-invariant scalar
-    var current: DataFrame = nodesF.withColumn("r", lit(Unit_)).persist()
+    var current: DataFrame = nodesF
     // the live checkpoint backing `current` (if any); released only when
     // superseded by a NEWER checkpoint
     var liveCheckpoint: Option[DataFrame] = None
@@ -464,54 +465,67 @@ object Graph {
     var dangCarried: Option[Long] = None
     var i = 0
     var converged = false
-    while (i < iters && !converged) {
-      i += 1
-      val r = current
-      val ct = contrib(r)
-      // one tiny job over the materialized rank table (or the carried
-      // value from the previous round's probe); both operands of the
-      // share are non-negative, so Scala's / == SQL's truncating div and
-      // the integer replay contract is untouched
-      // Katz-style recurrences keep β fixed instead of recycling dangling
-      // mass — skipping the probe saves one job per round there. Empty
-      // graph: no rows exist, but the scalar division must still not throw
-      val share =
-        if (!redistributeDangling || nNodes == 0) 0L
-        else dangCarried.getOrElse(r.where(col("dng"))
-          .agg(coalesce(sum(col("r")), lit(0L))).head().getLong(0)) / nNodes
-      val stepped = r.select(col("node"), col("dng"), col("r").as("r_old"))
-        .join(ct, Seq("node"), "left")
-        .select(col("node"), col("dng"), col("r_old"),
-          (lit(rankBase(dampNum, dampDen)) +
-            expr(s"($dampNum * (coalesce(c, 0L) + $share)) div $dampDen"))
-            .as("r"))
-      // ONE job materializes the round into constant-depth checkpoint
-      // blocks. Composed lazily instead, round i's plan nests every prior
-      // round's subtree and the DRIVER re-analyzes the growing tree for
-      // each of the round's actions: profiled on pagerank_until as wall
-      // 52 s vs task-wall 36 s vs CPU 21 s — the executors idle while
-      // Catalyst chews lineage. (Set `graft.checkpoint.dir` to trade the
-      // local copy for a RELIABLE checkpoint on a real cluster —
-      // [[graft.plans.Checkpoints]].) Fixed-iteration mode never reads
-      // r_old — drop it before materializing so the rank table stays lean.
-      val next = Checkpoints.truncate(
-        if (stopDeltaMicro >= 0L) stepped else stepped.drop("r_old"))
-      if (stopDeltaMicro >= 0L) {
-        // combined probe over the materialized blocks: convergence delta
-        // (no extra join — the step carried its parent rank in r_old)
-        // plus the next round's dangling mass
-        val row = next.agg(
-          coalesce(sum(abs(col("r") - col("r_old"))), lit(0L)),
-          coalesce(sum(when(col("dng"), col("r"))), lit(0L))).head()
-        converged = row.getLong(0) <= stopDeltaMicro
-        dangCarried = Some(row.getLong(1))
+    try {
+      val nNodes = nodesF.count() // barrier + the loop-invariant scalar
+      current = nodesF.withColumn("r", lit(Unit_)).persist()
+      while (i < iters && !converged) {
+        i += 1
+        val r = current
+        val ct = contrib(r)
+        // one tiny job over the materialized rank table (or the carried
+        // value from the previous round's probe); both operands of the
+        // share are non-negative, so Scala's / == SQL's truncating div and
+        // the integer replay contract is untouched
+        // Katz-style recurrences keep β fixed instead of recycling dangling
+        // mass — skipping the probe saves one job per round there. Empty
+        // graph: no rows exist, but the scalar division must still not throw
+        val share =
+          if (!redistributeDangling || nNodes == 0) 0L
+          else dangCarried.getOrElse(r.where(col("dng"))
+            .agg(coalesce(sum(col("r")), lit(0L))).head().getLong(0)) / nNodes
+        val stepped = r.select(col("node"), col("dng"), col("r").as("r_old"))
+          .join(ct, Seq("node"), "left")
+          .select(col("node"), col("dng"), col("r_old"),
+            (lit(rankBase(dampNum, dampDen)) +
+              expr(s"($dampNum * (coalesce(c, 0L) + $share)) div $dampDen"))
+              .as("r"))
+        // ONE job materializes the round into constant-depth checkpoint
+        // blocks. Composed lazily instead, round i's plan nests every prior
+        // round's subtree and the DRIVER re-analyzes the growing tree for
+        // each of the round's actions: profiled on pagerank_until as wall
+        // 52 s vs task-wall 36 s vs CPU 21 s — the executors idle while
+        // Catalyst chews lineage. (Set `graft.checkpoint.dir` to trade the
+        // local copy for a RELIABLE checkpoint on a real cluster —
+        // [[graft.plans.Checkpoints]].) Fixed-iteration mode never reads
+        // r_old — drop it before materializing so the rank table stays lean.
+        val next = Checkpoints.truncate(
+          if (stopDeltaMicro >= 0L) stepped else stepped.drop("r_old"))
+        // release the superseded parent: round 1's plain-persisted seed
+        // unpersists; later rounds' checkpoint blocks free via their handle
+        if (!liveCheckpoint.exists(_ eq r)) r.unpersist()
+        liveCheckpoint.foreach(c => CheckpointHandle.release(c))
+        liveCheckpoint = Some(next)
+        current = next
+        if (stopDeltaMicro >= 0L) {
+          // combined probe over the materialized blocks: convergence delta
+          // (no extra join — the step carried its parent rank in r_old)
+          // plus the next round's dangling mass
+          val row = next.agg(
+            coalesce(sum(abs(col("r") - col("r_old"))), lit(0L)),
+            coalesce(sum(when(col("dng"), col("r"))), lit(0L))).head()
+          converged = row.getLong(0) <= stopDeltaMicro
+          dangCarried = Some(row.getLong(1))
+        }
       }
-      // release the superseded parent: round 1's plain-persisted seed
-      // unpersists; later rounds' checkpoint blocks free via their handle
-      if (!liveCheckpoint.exists(_ eq r)) r.unpersist()
-      liveCheckpoint.foreach(c => CheckpointHandle.release(c))
-      liveCheckpoint = Some(next)
-      current = next
+    } catch {
+      case NonFatal(t) =>
+        // no caller holds a hook for a loop that failed: release what it
+        // pinned here, or nothing (not even a drain) ever frees it
+        e.unpersist(blocking = false)
+        nodesF.unpersist(blocking = false)
+        if (!liveCheckpoint.exists(_ eq current)) current.unpersist(blocking = false)
+        liveCheckpoint.foreach(c => CheckpointHandle.release(c))
+        throw t
     }
     val finalFrame = current
     val finalCheckpoint = liveCheckpoint
@@ -819,33 +833,47 @@ object Graph {
       iters: Int): (DataFrame, () => Unit) = {
     var labels = e.select(col("a").as("node")).distinct()
       .select(col("node"), col("node").as("label")).persist()
-    labels.count()
     import org.apache.spark.sql.graft.CheckpointHandle
     var liveCheckpoint: Option[DataFrame] = None
+    // the final round's persisted frame while its count runs
+    var persistedFinal: Option[DataFrame] = None
     var i = 0
-    while (i < iters) {
-      val nbrMin = e.join(labels, e("b") === labels("node"))
-        .groupBy(e("a").as("node")).agg(min("label").as("nl"))
-      val stepped = labels.join(nbrMin, Seq("node"), "left")
-        .select(col("node"),
-          least(col("label"), coalesce(col("nl"), col("label"))).as("label"))
-      // INTERMEDIATE rounds materialize in ONE job straight into
-      // constant-depth checkpoint blocks ([[iterate]]'s r17 round shape —
-      // the old persist → count → truncate-copy paid an extra block-copy
-      // job per round); the FINAL round stays a plain persisted frame so
-      // the returned hook's unpersist is always safe, with its lineage
-      // backed by the last intermediate checkpoint (released only via the
-      // registry's invalidating tier below)
-      val next =
-        if (i < iters - 1) Checkpoints.truncate(stepped)
-        else { val n = stepped.persist(); n.count(); n }
-      if (!liveCheckpoint.exists(_ eq labels)) labels.unpersist()
-      if (i < iters - 1) {
-        liveCheckpoint.foreach(c => CheckpointHandle.release(c))
-        liveCheckpoint = Some(next)
+    try {
+      labels.count()
+      while (i < iters) {
+        val nbrMin = e.join(labels, e("b") === labels("node"))
+          .groupBy(e("a").as("node")).agg(min("label").as("nl"))
+        val stepped = labels.join(nbrMin, Seq("node"), "left")
+          .select(col("node"),
+            least(col("label"), coalesce(col("nl"), col("label"))).as("label"))
+        // INTERMEDIATE rounds materialize in ONE job straight into
+        // constant-depth checkpoint blocks ([[iterate]]'s r17 round shape —
+        // the old persist → count → truncate-copy paid an extra block-copy
+        // job per round); the FINAL round stays a plain persisted frame so
+        // the returned hook's unpersist is always safe, with its lineage
+        // backed by the last intermediate checkpoint (released only via the
+        // registry's invalidating tier below)
+        val next =
+          if (i < iters - 1) Checkpoints.truncate(stepped)
+          else {
+            val n = stepped.persist(); persistedFinal = Some(n); n.count(); n
+          }
+        if (!liveCheckpoint.exists(_ eq labels)) labels.unpersist()
+        if (i < iters - 1) {
+          liveCheckpoint.foreach(c => CheckpointHandle.release(c))
+          liveCheckpoint = Some(next)
+        }
+        labels = next
+        i += 1
       }
-      labels = next
-      i += 1
+    } catch {
+      case NonFatal(t) =>
+        // as in [[iterateDistributed]]: a failed loop frees its own pins
+        e.unpersist(blocking = false)
+        if (!liveCheckpoint.exists(_ eq labels)) labels.unpersist(blocking = false)
+        persistedFinal.foreach(_.unpersist(blocking = false))
+        liveCheckpoint.foreach(c => CheckpointHandle.release(c))
+        throw t
     }
     e.unpersist(blocking = false)
     // the last intermediate checkpoint backs the final frame's lineage —
@@ -1616,37 +1644,47 @@ object Graph {
       .select(col("n.node").as("node"), col("s.src").isNull.as("dng"),
         col("snode").isNotNull.as("seed"))
       .persist()
-    val nNodes = nodesF.count()
-    val nSeedsActual = math.min(nSeeds.toLong, nNodes)
-    // per-seed teleport: two truncating divisions, in this exact order
-    // (the oracle replays the same parenthesization)
-    val tele =
-      if (nSeedsActual == 0) 0L
-      else ((dampDen - dampNum) * nNodes * Unit_ / dampDen) / nSeedsActual
-    var current: DataFrame =
-      nodesF.withColumn("r", lit(Unit_)).persist()
+    var current: DataFrame = nodesF
     var liveCheckpoint: Option[DataFrame] = None
-    for (_ <- 1 to iters) {
-      val r = current
-      val ct = contrib(r)
-      val dang = r.where(col("dng"))
-        .agg(coalesce(sum(col("r")), lit(0L))).head().getLong(0)
-      val extra =
+    try {
+      val nNodes = nodesF.count()
+      val nSeedsActual = math.min(nSeeds.toLong, nNodes)
+      // per-seed teleport: two truncating divisions, in this exact order
+      // (the oracle replays the same parenthesization)
+      val tele =
         if (nSeedsActual == 0) 0L
-        else dampNum * (dang / nSeedsActual) / dampDen
-      // ONE materialization per round ([[iterate]]'s r17 round shape):
-      // eager truncate into constant-depth checkpoint blocks replaces the
-      // persist → count → truncate-copy → unpersist sequence
-      val next = Checkpoints.truncate(
-        r.select(col("node"), col("dng"), col("seed"))
-          .join(ct, Seq("node"), "left")
-          .select(col("node"), col("dng"), col("seed"),
-            (when(col("seed"), lit(tele + extra)).otherwise(lit(0L)) +
-              expr(s"($dampNum * coalesce(c, 0L)) div $dampDen")).as("r")))
-      if (!liveCheckpoint.exists(_ eq r)) r.unpersist()
-      liveCheckpoint.foreach(c => CheckpointHandle.release(c))
-      liveCheckpoint = Some(next)
-      current = next
+        else ((dampDen - dampNum) * nNodes * Unit_ / dampDen) / nSeedsActual
+      current = nodesF.withColumn("r", lit(Unit_)).persist()
+      for (_ <- 1 to iters) {
+        val r = current
+        val ct = contrib(r)
+        val dang = r.where(col("dng"))
+          .agg(coalesce(sum(col("r")), lit(0L))).head().getLong(0)
+        val extra =
+          if (nSeedsActual == 0) 0L
+          else dampNum * (dang / nSeedsActual) / dampDen
+        // ONE materialization per round ([[iterate]]'s r17 round shape):
+        // eager truncate into constant-depth checkpoint blocks replaces the
+        // persist → count → truncate-copy → unpersist sequence
+        val next = Checkpoints.truncate(
+          r.select(col("node"), col("dng"), col("seed"))
+            .join(ct, Seq("node"), "left")
+            .select(col("node"), col("dng"), col("seed"),
+              (when(col("seed"), lit(tele + extra)).otherwise(lit(0L)) +
+                expr(s"($dampNum * coalesce(c, 0L)) div $dampDen")).as("r")))
+        if (!liveCheckpoint.exists(_ eq r)) r.unpersist()
+        liveCheckpoint.foreach(c => CheckpointHandle.release(c))
+        liveCheckpoint = Some(next)
+        current = next
+      }
+    } catch {
+      case NonFatal(t) =>
+        // as in [[iterateDistributed]]: a failed loop frees its own pins
+        e.unpersist(blocking = false)
+        nodesF.unpersist(blocking = false)
+        if (!liveCheckpoint.exists(_ eq current)) current.unpersist(blocking = false)
+        liveCheckpoint.foreach(c => CheckpointHandle.release(c))
+        throw t
     }
     val fin = current
     val finCp = liveCheckpoint

@@ -3,6 +3,7 @@ package graft.plans
 import java.util.concurrent.atomic.AtomicReference
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.CheckpointHandle
 
 /** Lineage truncation for the iterative operators (rank loops, label
   * propagation, k-core peeling), with a durability knob.
@@ -46,16 +47,20 @@ object Checkpoints {
     * releasable via
     * [[org.apache.spark.sql.graft.CheckpointHandle.release]] (which is a
     * no-op for the reliable form: its data is checkpoint FILES, cleaned
-    * with the SparkContext, not persisted blocks).
+    * with the SparkContext, not persisted blocks). A materialization
+    * that fails leaves no RDD of its own persisted
+    * ([[org.apache.spark.sql.graft.CheckpointHandle.releasingOnFailure]]).
     */
   def truncate(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    reliableDir(spark) match {
-      case Some(dir) =>
-        if (lastDir.getAndSet(dir) != dir)
-          spark.sparkContext.setCheckpointDir(dir)
-        df.checkpoint()
-      case None => df.localCheckpoint(eager = true)
+    CheckpointHandle.releasingOnFailure(spark.sparkContext) {
+      reliableDir(spark) match {
+        case Some(dir) =>
+          if (lastDir.getAndSet(dir) != dir)
+            spark.sparkContext.setCheckpointDir(dir)
+          df.checkpoint()
+        case None => df.localCheckpoint(eager = true)
+      }
     }
   }
 }

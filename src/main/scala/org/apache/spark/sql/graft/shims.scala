@@ -1,6 +1,9 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.rdd.RDD
+import scala.util.control.NonFatal
+
+import org.apache.spark.SparkContext
+import org.apache.spark.rdd.{RDD, RDDOperationScope}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -35,6 +38,29 @@ object CheckpointHandle {
   /** Unpersist the checkpoint backing `df` (no-op for non-checkpoint plans). */
   def release(df: DataFrame): Unit =
     rddOf(df).foreach(_.unpersist(blocking = false))
+
+  /** Runs `checkpoint`, an eager checkpoint of a Dataset; when it throws,
+    * unpersists the RDD the failed call had persisted. Spark's eager
+    * checkpoint persists its internal `map(_.copy())` RDD before the job
+    * and keeps it when the job fails, and no handle ever reaches it. That
+    * RDD takes its operation scope's parent from this thread's
+    * `spark.rdd.scope` property at creation (the plan's own RDDs ignore
+    * the parent scope), so a scope set for the call marks exactly the
+    * RDDs this call made, whatever other threads persist meanwhile.
+    */
+  def releasingOnFailure(sc: SparkContext)(checkpoint: => DataFrame): DataFrame = {
+    val marker = new RDDOperationScope("graft.checkpoint")
+    val prev = sc.getLocalProperty(SparkContext.RDD_SCOPE_KEY)
+    sc.setLocalProperty(SparkContext.RDD_SCOPE_KEY, marker.toJson)
+    try checkpoint
+    catch {
+      case NonFatal(t) =>
+        sc.getPersistentRDDs.values
+          .filter(_.scope.exists(_.parent.exists(_.id == marker.id)))
+          .foreach(_.unpersist(blocking = false))
+        throw t
+    } finally sc.setLocalProperty(SparkContext.RDD_SCOPE_KEY, prev)
+  }
 }
 
 /** Bloom-filter semi-join pruning built from Spark's OWN sketch

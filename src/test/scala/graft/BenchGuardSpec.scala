@@ -160,4 +160,11 @@ class BenchGuardSpec extends AnyFunSuite {
         f"$sumSec%.1f s x ${Bench.ProtocolMultiplier} passes x " +
         f"$coldFactor%.2f cold factor + $marginSec%.0f s margin)")
   }
+
+  test("a failed fixture probe is recorded as its error, as valid JSON") {
+    val j = Bench.errorJson(new IllegalStateException("no \"edges\"\nat all"))
+    val parsed = org.json4s.jackson.JsonMethods.parse(j)
+    assert((parsed \ "error") === org.json4s.JString(
+      "java.lang.IllegalStateException: no \"edges\"\nat all"))
+  }
 }

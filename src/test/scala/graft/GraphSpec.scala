@@ -685,17 +685,23 @@ class GraphSpec extends SparkSpec {
     }
   }
 
-  test("local loops pin nothing: persisted RDDs and the registry stay at baseline") {
-    import graft.plans.ReleaseRegistry
-    ReleaseRegistry.drain()
+  /** Drains the registry and returns a check that every RDD persisted
+    * since is gone again (waiting out `blocking = false` unpersists).
+    */
+  private def persistedBaseline(): String => Unit = {
+    graft.plans.ReleaseRegistry.drain()
     val before = spark.sparkContext.getPersistentRDDs.keySet
     def leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    def awaitBaseline(what: String): Unit = {
-      // the collected edge frame unpersists with blocking = false
+    what => {
       val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
       while (leaked.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
       assert(leaked.isEmpty, s"$what left RDDs pinned: $leaked")
     }
+  }
+
+  test("local loops pin nothing: persisted RDDs and the registry stay at baseline") {
+    import graft.plans.ReleaseRegistry
+    val awaitBaseline = persistedBaseline()
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (10L, 11L))
       .toDF("src", "dst")
     val wedges = edges.withColumn("w", $"src" + 1L)
@@ -727,15 +733,28 @@ class GraphSpec extends SparkSpec {
     // base = 10⁶·1 div (10¹³+1) = 0, but 10¹³ · (10⁶ contribution) > 2⁶³:
     // the local kernel's Math.multiplyExact and Spark's ANSI multiply must
     // both throw instead of wrapping
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
-    for (gate <- Seq(Long.MaxValue, 0L)) {
-      val err = intercept[Exception] {
-        Graph.pageRankCore(edges, 3, 10000000000000L, 10000000000001L, -1L,
-          gate).ranks.collect()
-      }
+    // — and a failed distributed loop frees what it pinned: no caller
+    // ever gets a hook for it, so neither a drain nor anything else could
+    import graft.plans.ReleaseRegistry
+    def failsLoudlyAndFreesPins(what: String)(run: => Unit): Unit = {
+      val awaitBaseline = persistedBaseline()
+      val err = intercept[Exception](run)
       val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
       assert(chain.exists(_.isInstanceOf[ArithmeticException]),
-        s"gate $gate: expected an arithmetic overflow, got $err")
+        s"$what: expected an arithmetic overflow, got $err")
+      assert(ReleaseRegistry.pending === 0, s"$what: the failure queued a hook")
+      ReleaseRegistry.drain()
+      awaitBaseline(s"$what: the failed loop")
+    }
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
+    for (gate <- Seq(Long.MaxValue, 0L)) failsLoudlyAndFreesPins(s"gate $gate") {
+      Graph.pageRankCore(edges, 3, 10000000000000L, 10000000000001L, -1L,
+        gate).ranks.collect()
+    }
+    // no driver-local path; its rounds overflow the same way
+    failsLoudlyAndFreesPins("personalizedPageRank") {
+      Graph.personalizedPageRank(edges, 1, 3, 10000000000000L, 10000000000001L)
+        .collect()
     }
   }
 }

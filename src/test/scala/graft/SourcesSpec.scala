@@ -3,7 +3,9 @@ package graft
 import java.nio.file.Files
 
 import graft.sources.Sources
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SaveMode
+import org.apache.spark.sql.types.{BinaryType, StringType}
 
 class SourcesSpec extends SparkSpec {
 
@@ -151,5 +153,91 @@ class SourcesSpec extends SparkSpec {
     val plan = pruned.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [isnotnull(part"),
       s"expected partition filter in scan:\n$plan")
+  }
+
+  // ── Tables' schema cache ──
+
+  test("schema cache: every fixture table loads with the schema spark.read infers") {
+    for (n <- Tables.names) {
+      val inferred = spark.read.parquet(s"$sfDir/$n.parquet").schema
+      assert(Tables.load(spark, sfDir, n).schema === inferred, n)
+      assert(Tables.load(spark, sfDir, n).schema === inferred, s"$n, cached")
+    }
+  }
+
+  /** Spark jobs `body` starts on this thread: a listener collects the
+    * thread's jobs by job group, and a marker job after `body` shows
+    * when the (ordered, asynchronous) listener queue has caught up.
+    */
+  private def jobsStartedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${System.nanoTime()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null && js.properties.getProperty("spark.jobGroup.id") == group)
+          seen.add(Option(js.properties.getProperty("spark.job.description")).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "body")
+    try {
+      body
+      sc.setJobDescription("marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (!seen.contains("marker") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(seen.contains("marker"), "listener never saw the marker job")
+      seen.size - 1
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("schema cache: a second load of an unchanged table starts no Spark job") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-schema-jobs").toString
+    (1 to 10).toDF("x").write.parquet(s"$dir/t.parquet")
+    assert(jobsStartedBy(Tables.load(spark, dir, "t")) >= 1, "the first load infers")
+    assert(jobsStartedBy(Tables.load(spark, dir, "t")) === 0)
+  }
+
+  test("schema cache: overwriting a table with a new schema shows on the next load") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-schema-rewrite").toString
+    val path = s"$dir/t.parquet"
+    (1 to 3).toDF("x").write.parquet(path)
+    assert(Tables.load(spark, dir, "t").columns.toSeq === Seq("x"))
+    Seq(("a", 7L)).toDF("s", "y").write.mode(SaveMode.Overwrite).parquet(path)
+    val back = Tables.load(spark, dir, "t")
+    assert(back.columns.toSeq === Seq("s", "y"))
+    assert(back.as[(String, Long)].collect().toSeq === Seq(("a", 7L)))
+  }
+
+  test("schema cache: flipping binaryAsString changes the next load's column type") {
+    import spark.implicits._
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    // written by parquet itself: a file Spark writes records its own schema
+    // in the footer, and inference prefers that over the conf
+    val dir = Files.createTempDirectory("graft-schema-conf").toString
+    val conf = spark.sparkContext.hadoopConfiguration
+    val schema = MessageTypeParser.parseMessageType("message t { required binary b; }")
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+      new org.apache.hadoop.fs.Path(s"$dir/t.parquet"), conf)).withType(schema).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup().append("b", "hi"))
+    finally w.close()
+    val key = "spark.sql.parquet.binaryAsString"
+    val prev = spark.conf.get(key)
+    assert(Tables.load(spark, dir, "t").schema("b").dataType === BinaryType)
+    spark.conf.set(key, "true")
+    try {
+      val asString = Tables.load(spark, dir, "t")
+      assert(asString.schema("b").dataType === StringType)
+      assert(asString.as[String].head() === "hi")
+    } finally spark.conf.set(key, prev)
+    assert(Tables.load(spark, dir, "t").schema("b").dataType === BinaryType)
   }
 }
