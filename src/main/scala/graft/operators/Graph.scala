@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -27,17 +28,20 @@ import graft.plans.{Checkpoints, ReleaseRegistry}
   * iteration's join reuses that layout while only the (much smaller) rank
   * table moves — and (2) one map-side-combined integer-sum shuffle on
   * `dst`. Dangling mass is a single scalar aggregate broadcast back.
-  * Uniform and weighted PageRank and Katz share ONE loop ([[iterate]])
-  * differing only in the contribution expression: every round is one
-  * eager checkpoint job with constant-depth lineage, and all variants get
-  * the same convergence stop. Label propagation
-  * ([[labelPropagateReleasable]]) has the same round shape.
+  * Uniform and weighted PageRank and Katz share ONE loop
+  * ([[iterateDistributed]]) differing only in the contribution
+  * expression: every round is one eager checkpoint job with
+  * constant-depth lineage, and all variants get the same convergence
+  * stop. Label propagation ([[labelPropagateReleasable]]) has the same
+  * round shape.
   *
-  * Small graphs skip the per-round jobs: when the edge frame has at most
-  * [[LocalLoopMaxRows]] rows and integral, non-null ids, both loops
-  * collect it once and run every round on the driver over primitive
-  * arrays with the same integer recurrence, so the two paths return
-  * bit-identical frames (see [[iterate]]).
+  * Small graphs skip the edge layout and the per-round jobs: each loop
+  * first gathers its deduplicated pair frame straight off the dedup in
+  * one job ([[gatherIntegral]]), and when that frame has at most
+  * [[LocalLoopMaxRows]] rows of integral, non-null ids, every round runs
+  * on the driver over primitive arrays with the same integer recurrence,
+  * so the two paths return bit-identical frames (see [[iterateLocal]]).
+  * Only above the gate is the `src`-partitioned, persisted layout built.
   *
   * Lifecycle: every public entry either returns a [[RankResult]] with
   * explicit release hooks or (the plain-`DataFrame` conveniences)
@@ -50,9 +54,14 @@ object Graph {
   /** One PageRank unit in micro-units. */
   val Unit_ : Long = 1000000L
 
-  /** Edge-frame row cap for the driver-local rounds of [[iterate]] and
-    * [[labelPropagateReleasable]]; above it the rounds run as distributed
-    * jobs. Set just above the largest graph measured on both paths: at
+  /** Row cap on the gathered edge frame for the driver-local rounds; above
+    * it the rounds run as distributed jobs. It counts the deduplicated
+    * `(src, dst)` pairs of the rank loops (before any degree join, so a
+    * pair with a null id counts too) and the DOUBLED undirected pairs of
+    * label propagation (each canonical pair once per direction: that loop
+    * gathers the canonical pairs against half the cap). The gather never
+    * ships more than this many rows to the driver. Set just above the
+    * largest graph measured on both paths: at
     * sf0.1 (587k trade edges for pagerank, 2.39M doubled co-purchase edges
     * for label propagation; 4 local cores, 7 GB heap) the local rounds
     * were 1.3–2.2× faster in two back-to-back pairs of runs (median warm
@@ -136,9 +145,16 @@ object Graph {
   private[graft] def pageRankCore(edges: DataFrame, iters: Int,
       dampNum: Long, dampDen: Long, stopDeltaMicro: Long,
       localMaxRows: Long = LocalLoopMaxRows): RankResult = {
-    val (e, nEdges) = prepareUniform(edges)
-    iterate(e, nEdges, localMaxRows, uniformContrib(e), (r, od) => r / od,
-      iters, dampNum, dampDen, stopDeltaMicro)
+    val pairs = edges.select(col("src"), col("dst")).distinct()
+    gatherIntegral(pairs, localMaxRows) match {
+      case Some(Array(src, dst)) =>
+        iterateLocal(pairs, src, dst, outDegrees,
+          (r, od) => r / od, iters, dampNum, dampDen, stopDeltaMicro)
+      case _ =>
+        val e = prepareUniform(edges)
+        iterateDistributed(e, uniformContrib(e), iters, dampNum, dampDen,
+          stopDeltaMicro)
+    }
   }
 
   /** Weighted PageRank: edge weights steer the rank flow — node `v`
@@ -155,10 +171,12 @@ object Graph {
     * order-independent: any engine replays the cascade bit-exactly.
     * Dangling mass (no out-edges) redistributes exactly as [[pageRank]].
     *
-    * Runs through the SAME [[iterate]] loop as uniform PageRank (only the
+    * Runs through the SAME loops as uniform PageRank (only the
     * contribution expression differs), so it inherits the one-job round
     * with per-round lineage truncation, the convergence support and the
-    * driver-local path for small graphs. Returns a [[RankResult]] with
+    * driver-local path for small graphs: the gate gathers the per-pair
+    * weight sums, and the driver derives `Σw` and `wn` from them with the
+    * same overflow-checked integer math. Returns a [[RankResult]] with
     * release hooks.
     */
   def pageRankWeighted(edges: DataFrame, iters: Int = 3,
@@ -169,26 +187,43 @@ object Graph {
   private[graft] def pageRankWeightedCore(edges: DataFrame, iters: Int,
       dampNum: Long, dampDen: Long,
       localMaxRows: Long = LocalLoopMaxRows): RankResult = {
-    // same exchange discipline as [[prepareUniform]]: the per-pair sum
-    // stays FIRST (map-side combined over the raw stream), the `src`
-    // layout sits directly on its output, and the out-weight aggregate +
-    // join then plan exchange-free on that layout — 2 edge-scale
-    // exchanges instead of the first-draft 4
-    val agg = edges.select(col("src"), col("dst"), col("w"))
+    val pairs = weightedPairs(edges)
+    gatherIntegral(pairs, localMaxRows) match {
+      case Some(Array(src, dst, w)) =>
+        iterateLocal(pairs, src, dst, (s, n) => normalizedWeights(s, w, n),
+          (r, wn) => Math.multiplyExact(r, wn) / 1000000L,
+          iters, dampNum, dampDen, stopDeltaMicro = -1L)
+      case _ =>
+        val e = prepareWeighted(pairs)
+        iterateDistributed(e,
+          r => e.join(r, e("src") === r("node"))
+            .select(col("dst").as("node"), expr("(r * wn) div 1000000L").as("c"))
+            .groupBy("node").agg(sum("c").as("c")),
+          iters, dampNum, dampDen, stopDeltaMicro = -1L)
+    }
+  }
+
+  /** `(src, dst, w)` with the weights of duplicate pairs summed. */
+  private def weightedPairs(edges: DataFrame): DataFrame =
+    edges.select(col("src"), col("dst"), col("w"))
       .groupBy("src", "dst").agg(sum("w").as("w"))
-      .repartition(col("src"))
+
+  /** Weighted edge prep for the distributed rounds: `(src, dst, wn)` laid
+    * out on `src`, persisted and counted. Same exchange discipline as
+    * [[prepareUniform]]: the per-pair sum stays FIRST (map-side combined
+    * over the raw stream), the `src` layout sits directly on its output,
+    * and the out-weight aggregate + join then plan exchange-free on that
+    * layout — 2 edge-scale exchanges instead of the first-draft 4.
+    */
+  private def prepareWeighted(pairs: DataFrame): DataFrame = {
+    val agg = pairs.repartition(col("src"))
     val outW = agg.groupBy("src").agg(sum("w").as("sw"))
     val e = agg.join(outW, "src")
       .select(col("src"), col("dst"),
         expr("(w * 1000000L) div sw").as("wn"))
       .persist()
-    val nEdges = e.count()
-    iterate(e, nEdges, localMaxRows,
-      r => e.join(r, e("src") === r("node"))
-        .select(col("dst").as("node"), expr("(r * wn) div 1000000L").as("c"))
-        .groupBy("node").agg(sum("c").as("c")),
-      (r, wn) => Math.multiplyExact(r, wn) / 1000000L,
-      iters, dampNum, dampDen, stopDeltaMicro = -1L)
+    e.count() // barrier: materialize before the iteration chain re-reads
+    e
   }
 
   /** [[pageRankWeighted]] as a plain frame, release hook queued with the
@@ -202,9 +237,12 @@ object Graph {
     res.ranks
   }
 
-  /** Uniform-split edge prep: dedup, pre-join each edge's out-degree
-    * (loop-invariant — joining it INSIDE the loop would re-pay an
-    * aggregate + join every iteration), lay out on `src` once, persist.
+  /** Uniform-split edge prep for the distributed rounds: dedup, pre-join
+    * each edge's out-degree (loop-invariant — joining it INSIDE the loop
+    * would re-pay an aggregate + join every iteration), lay out on `src`
+    * once, persist. Only the distributed rounds read this layout; the
+    * driver-local path derives `od` from the gathered pairs instead
+    * ([[outDegrees]]).
     *
     * Exchange order matters (guide §2.4 — share one exchange): the
     * repartition on `src` sits directly ON the deduped set, so the
@@ -218,18 +256,18 @@ object Graph {
     * still shrinks before any shuffle — at 100 TB the raw pair stream
     * is orders of magnitude bigger than the deduped set.
     *
-    * Returns the persisted frame and its row count (the barrier's value,
-    * which the local-loop gate reads).
+    * Returns the persisted frame, counted: the count is the barrier that
+    * materializes the layout before the rounds re-read it.
     */
-  private def prepareUniform(edges: DataFrame): (DataFrame, Long) = {
+  private def prepareUniform(edges: DataFrame): DataFrame = {
     val dedup = edges.select(col("src"), col("dst")).distinct()
       .repartition(col("src")) // iteration joins reuse this layout
     val e = dedup
       .join(dedup.groupBy("src").agg(count(lit(1)).as("od")), "src")
       .select(col("src"), col("dst"), col("od"))
       .persist()
-    // barrier: materialize before the iteration chain re-reads
-    (e, e.count())
+    e.count() // barrier: materialize before the iteration chain re-reads
+    e
   }
 
   /** Uniform contribution: each node splits its rank equally over its
@@ -242,81 +280,108 @@ object Graph {
       .select(col("dst").as("node"), expr("r div od").as("c"))
       .groupBy("node").agg(sum("c").as("c"))
 
-  /** The shared loop for every rank variant, with two paths chosen by a
-    * count gate (the `Dedup.resolveClustersReleasable` idiom).
-    *
-    * '''Driver-local path''' — `nEdges ≤ localMaxRows` and every column
-    * of `e` integral with no null. `nEdges` is the count barrier the prep
-    * already paid, so the gate adds no job. The edge frame is collected
-    * once ([[collectIntegral]]) and unpersisted, the ids are mapped to
-    * dense ints, and every round runs over primitive arrays with the same
-    * integer recurrence as the distributed rounds: `localContrib(r, aux)`
-    * per edge (`r div od`, `(r·wn) div 10⁶` or plain `r`, `aux` being the
-    * third column), the update `Unit_·(den−num) div den + (num·(c+share))
-    * div den`, the dangling share `Σr[dng] div nNodes` (skipped when
-    * `redistributeDangling` is false), and the stop `Σ|r−r_old| ≤
-    * stopDeltaMicro` with the same `itersRun`. Arithmetic is
-    * overflow-checked (`Math.*Exact`), so an overflowing input throws as
-    * Spark's ANSI arithmetic does on the distributed path instead of
-    * wrapping. The ranks come back as a one-partition frame with the same
-    * column names and types; the release hooks are no-ops and nothing is
-    * registered with [[graft.plans.ReleaseRegistry]] (`pinned` is false).
-    *
-    * '''Distributed path''' — everything else ([[iterateDistributed]]).
-    */
-  private def iterate(e: DataFrame, nEdges: Long, localMaxRows: Long,
-      contrib: DataFrame => DataFrame, localContrib: (Long, Long) => Long,
-      iters: Int, dampNum: Long, dampDen: Long, stopDeltaMicro: Long,
-      redistributeDangling: Boolean = true): RankResult =
-    collectIntegral(e, nEdges, localMaxRows) match {
-      case Some(cols) =>
-        // node column exactly as the distributed rank table types it
-        // (analysis only, no job)
-        val nodeField = e.select(col("src").as("node"))
-          .union(e.select(col("dst").as("node"))).schema.head
-        e.unpersist(blocking = false)
-        iterateLocal(e.sparkSession, cols, nodeField, localContrib, iters,
-          dampNum, dampDen, stopDeltaMicro, redistributeDangling)
-      case None =>
-        iterateDistributed(e, contrib, iters, dampNum, dampDen,
-          stopDeltaMicro, redistributeDangling)
-    }
-
   /** `Unit_·(den−num) div den`, the rank update's constant term (shared by
     * both paths; overflow-checked like the rest of the recurrence).
     */
   private def rankBase(dampNum: Long, dampDen: Long): Long =
     Math.multiplyExact(Unit_, Math.subtractExact(dampDen, dampNum)) / dampDen
 
-  /** The persisted edge frame as one primitive array per column, gathered
-    * by one collect job — or `None` when the frame has more than
-    * `maxRows` rows, a non-integral column or a null, the inputs the
-    * distributed loops keep. `nRows` is the frame's already-paid count.
+  /** One partition's answer to a [[gatherIntegral]] job: its row count
+    * (capped), whether it saw a null, and its rows as one primitive array
+    * per column — `null` when it withheld them for holding too many.
     */
-  private def collectIntegral(e: DataFrame, nRows: Long,
+  private final case class Gathered(rows: Long, hasNull: Boolean,
+      cols: Array[Array[Long]])
+
+  /** `df` as one primitive array per column, gathered to the driver in
+    * one job — or `None` when it has more than `maxRows` rows, a
+    * non-integral column or a null, the inputs the distributed loops keep.
+    * This is the local-loop gate: the row count it decides on comes out
+    * of the same job that ships the rows, so the gate costs no count
+    * barrier and `df` is never persisted.
+    *
+    * What reaches the driver stays within `maxRows` rows in every case:
+    * each task ships its rows only while its partition holds at most
+    * `maxRows / numPartitions` of them; a bigger partition ships only its
+    * count, and counts no further than `maxRows + 1`. When the total is
+    * within the cap but some partitions withheld their rows (skew), a
+    * second job reads just those partitions of the same RDD, so a shuffle
+    * `df` ends in is read again, not recomputed. Rows come back in
+    * partition order.
+    */
+  private[graft] def gatherIntegral(df: DataFrame,
       maxRows: Long): Option[Array[Array[Long]]] = {
-    val integral = e.schema.forall(_.dataType match {
+    val integral = df.schema.forall(_.dataType match {
       case LongType | IntegerType | ShortType | ByteType => true
       case _ => false
     })
-    if (nRows > maxRows || !integral) return None
-    val w = e.schema.length
-    val parts = e.select(e.columns.map(c => col(c).cast(LongType)).toSeq: _*)
-      .queryExecution.toRdd.mapPartitions { it =>
-        val out = Array.fill(w)(new scala.collection.mutable.ArrayBuilder.ofLong)
-        var hasNull = false
-        while (!hasNull && it.hasNext) {
-          val row = it.next()
-          var j = 0
-          while (j < w) {
-            if (row.isNullAt(j)) hasNull = true else out(j) += row.getLong(j)
-            j += 1
-          }
-        }
-        Iterator.single(if (hasNull) null else out.map(_.result()))
-      }.collect()
-    if (parts.contains(null)) None
-    else Some(Array.tabulate(w)(j => parts.flatMap(_(j))))
+    if (!integral) return None
+    val w = df.schema.length
+    val rdd = df.select(df.columns.map(c => col(c).cast(LongType)).toSeq: _*)
+      .queryExecution.toRdd
+    val countCap = if (maxRows == Long.MaxValue) maxRows else maxRows + 1
+    // no job for no partitions (the scheduler would still post one)
+    def gather(parts: Seq[Int], shipMax: Long): Array[Gathered] =
+      if (parts.isEmpty) Array.empty
+      else df.sparkSession.sparkContext.runJob(rdd,
+        (it: Iterator[InternalRow]) => gatherPartition(it, w, shipMax, countCap),
+        parts)
+    val nParts = rdd.getNumPartitions
+    val first = gather(0 until nParts, maxRows / math.max(nParts, 1))
+    // each count is at most `countCap`: saturate rather than wrap
+    val total = first.foldLeft(0L)((t, g) =>
+      if (t > Long.MaxValue - g.rows) Long.MaxValue else t + g.rows)
+    if (first.exists(_.hasNull) || total > maxRows) return None
+    val withheld = first.indices.filter(first(_).cols == null)
+    // the first job already read every row of these partitions, nulls
+    // included: this one only ships them
+    withheld.zip(gather(withheld, Long.MaxValue)).foreach { case (p, g) => first(p) = g }
+    Some(Array.tabulate(w)(j => Array.concat(first.map(_.cols(j)).toSeq: _*)))
+  }
+
+  /** A [[gatherIntegral]] task over one partition: stops at the first null
+    * or after `countCap` rows, and drops its buffers once past `shipMax`.
+    */
+  private def gatherPartition(it: Iterator[InternalRow], w: Int,
+      shipMax: Long, countCap: Long): Gathered = {
+    var out = Array.fill(w)(new scala.collection.mutable.ArrayBuilder.ofLong)
+    var n = 0L
+    while (n < countCap && it.hasNext) {
+      val row = it.next()
+      var j = 0
+      while (j < w) {
+        if (row.isNullAt(j)) return Gathered(n, hasNull = true, null)
+        j += 1
+      }
+      n += 1
+      if (n > shipMax) out = null
+      if (out != null) {
+        j = 0
+        while (j < w) { out(j) += row.getLong(j); j += 1 }
+      }
+    }
+    Gathered(n, hasNull = false, if (out == null) null else out.map(_.result()))
+  }
+
+  /** Each edge's out-degree `od` (as [[prepareUniform]] joins it in) from
+    * the dense source index of every deduplicated pair.
+    */
+  private def outDegrees(src: Array[Int], nNodes: Int): Array[Long] = {
+    val od = new Array[Long](nNodes)
+    src.foreach(v => od(v) += 1)
+    src.map(od(_))
+  }
+
+  /** Each edge's `wn = (w·10⁶) div Σw` (as [[prepareWeighted]] derives
+    * it, `Σw` over the source's out-edges), overflow-checked like Spark's
+    * ANSI arithmetic on the distributed path.
+    */
+  private def normalizedWeights(src: Array[Int], w: Array[Long],
+      nNodes: Int): Array[Long] = {
+    val sw = new Array[Long](nNodes)
+    var k = 0
+    while (k < src.length) { sw(src(k)) = Math.addExact(sw(src(k)), w(k)); k += 1 }
+    Array.tabulate(src.length)(k => Math.multiplyExact(w(k), Unit_) / sw(src(k)))
   }
 
   /** Sorted distinct ids of `a ++ b`, and each endpoint's index among them.
@@ -359,13 +424,35 @@ object Graph {
     case _ => v
   }
 
-  /** [[iterate]]'s driver-local rounds over `cols` = `(src, dst[, aux])`. */
-  private def iterateLocal(spark: SparkSession, cols: Array[Array[Long]],
-      nodeField: StructField, contrib: (Long, Long) => Long, iters: Int,
-      dampNum: Long, dampDen: Long, stopDeltaMicro: Long,
-      redistributeDangling: Boolean): RankResult = {
-    val (ids, src, dst) = denseIds(cols(0), cols(1))
-    val aux = if (cols.length > 2) cols(2) else new Array[Long](src.length)
+  /** The rank loops' driver-local rounds, run when [[gatherIntegral]]
+    * shipped the deduplicated pairs `(src, dst)` of `pairs` (an integral,
+    * null-free frame within the gate). The ids are mapped to dense ints,
+    * `aux(srcIndex, nNodes)` derives each edge's third operand on the
+    * driver (`od`, `wn` or nothing — what the distributed prep joins in),
+    * and every round runs over primitive arrays with the same integer
+    * recurrence as [[iterateDistributed]]: `contrib(r, aux)` per edge
+    * (`r div od`, `(r·wn) div 10⁶` or plain `r`), the update
+    * `Unit_·(den−num) div den + (num·(c+share)) div den`, the dangling
+    * share `Σr[dng] div nNodes` (skipped when `redistributeDangling` is
+    * false), and the stop `Σ|r−r_old| ≤ stopDeltaMicro` with the same
+    * `itersRun`. Arithmetic is overflow-checked (`Math.*Exact`), so an
+    * overflowing input throws as Spark's ANSI arithmetic does on the
+    * distributed path instead of wrapping. The ranks come back as a
+    * one-partition frame with the same column names and types; the
+    * release hooks are no-ops and nothing is registered with
+    * [[graft.plans.ReleaseRegistry]] (`pinned` is false).
+    */
+  private def iterateLocal(pairs: DataFrame, srcIds: Array[Long],
+      dstIds: Array[Long], aux: (Array[Int], Int) => Array[Long],
+      contrib: (Long, Long) => Long, iters: Int, dampNum: Long,
+      dampDen: Long, stopDeltaMicro: Long,
+      redistributeDangling: Boolean = true): RankResult = {
+    // node column exactly as the distributed rank table types it
+    // (analysis only, no job)
+    val nodeField = pairs.select(col("src").as("node"))
+      .union(pairs.select(col("dst").as("node"))).schema.head
+    val (ids, src, dst) = denseIds(srcIds, dstIds)
+    val auxOf = aux(src, ids.length)
     val n = ids.length
     val dng = Array.fill(n)(true)
     src.foreach(v => dng(v) = false)
@@ -385,7 +472,7 @@ object Graph {
       val c = new Array[Long](n)
       var k = 0
       while (k < src.length) {
-        c(dst(k)) = Math.addExact(c(dst(k)), contrib(r(src(k)), aux(k)))
+        c(dst(k)) = Math.addExact(c(dst(k)), contrib(r(src(k)), auxOf(k)))
         k += 1
       }
       val next = new Array[Long](n)
@@ -407,12 +494,13 @@ object Graph {
       }
       r = next
     }
-    val ranks = oneTaskFrame(spark,
+    val ranks = oneTaskFrame(pairs.sparkSession,
       StructType(Seq(nodeField, StructField("rank_micro", LongType))), ids, r)
     RankResult(ranks, i, () => (), pinned = false)
   }
 
-  /** [[iterate]]'s distributed rounds. Each iteration
+  /** The rank loops' distributed rounds, run when the gathered pairs are
+    * above the gate ([[gatherIntegral]]). Each iteration
     * reads the previous rank table up to three times (edge join, dangling
     * scan, node-preserving left join) — composed lazily that triples the
     * lineage per step (27x the base subtree at 3 iterations). Materialize
@@ -441,7 +529,7 @@ object Graph {
   private def iterateDistributed(e: DataFrame,
       contrib: DataFrame => DataFrame, iters: Int, dampNum: Long,
       dampDen: Long, stopDeltaMicro: Long,
-      redistributeDangling: Boolean): RankResult = {
+      redistributeDangling: Boolean = true): RankResult = {
     import org.apache.spark.sql.graft.CheckpointHandle
     // whether a node dangles (no out-edges) never changes — resolve it
     // ONCE as a flag carried on the rank table, so each iteration's
@@ -555,13 +643,16 @@ object Graph {
   /** Edge prep without the out-degree column (Katz's contribution is an
     * UNNORMALIZED in-neighbor sum — pre-joining a degree nobody reads
     * would pay an aggregate + join at prep for nothing): dedup, lay out
-    * on `src` once, persist. Returns the frame and its row count.
+    * on `src` once, persist, and count as the barrier that materializes
+    * the layout before the rounds re-read it. Read by Katz's distributed
+    * rounds and by [[hits]]; Katz's driver-local path gathers the
+    * deduplicated pairs without it.
     */
-  private def preparePlain(edges: DataFrame): (DataFrame, Long) = {
+  private def preparePlain(edges: DataFrame): DataFrame = {
     val e = edges.select(col("src"), col("dst")).distinct()
       .repartition(col("src")).persist()
-    // barrier: materialize before the iteration chain re-reads
-    (e, e.count())
+    e.count() // barrier: materialize before the iteration chain re-reads
+    e
   }
 
   /** Unnormalized contribution: each in-neighbor donates its full score
@@ -584,10 +675,10 @@ object Graph {
     * strength to every neighbor. Fixed `iters` rounds = the k-truncated
     * Katz series, replayable exactly by unrolled CTEs.
     *
-    * Scale shape: identical to [[pageRank]] — the shared [[iterate]]
-    * loop (edges partitioned+persisted once, rank table the only moving
-    * state, one eager-checkpoint job per round, driver-local rounds for
-    * small graphs), minus the one dangling-mass job per round the
+    * Scale shape: identical to [[pageRank]] — the shared rank
+    * loops (edges partitioned+persisted once, rank table the only moving
+    * state, one eager-checkpoint job per round; driver-local rounds over
+    * the gathered pairs for small graphs), minus the one dangling-mass job per round the
     * `redistributeDangling=false` switch removes.
     */
   def katzCentrality(edges: DataFrame, iters: Int = 3,
@@ -604,9 +695,17 @@ object Graph {
       alphaDen: Long, localMaxRows: Long = LocalLoopMaxRows): RankResult = {
     require(alphaNum > 0 && alphaNum < alphaDen,
       s"katz: need 0 < alpha < 1, got $alphaNum/$alphaDen")
-    val (e, nEdges) = preparePlain(edges)
-    iterate(e, nEdges, localMaxRows, plainContrib(e), (r, _) => r, iters,
-      alphaNum, alphaDen, stopDeltaMicro = -1L, redistributeDangling = false)
+    val pairs = edges.select(col("src"), col("dst")).distinct()
+    gatherIntegral(pairs, localMaxRows) match {
+      case Some(Array(src, dst)) =>
+        iterateLocal(pairs, src, dst, (s, _) => new Array[Long](s.length),
+          (r, _) => r, iters, alphaNum, alphaDen, stopDeltaMicro = -1L,
+          redistributeDangling = false)
+      case _ =>
+        val e = preparePlain(edges)
+        iterateDistributed(e, plainContrib(e), iters, alphaNum, alphaDen,
+          stopDeltaMicro = -1L, redistributeDangling = false)
+    }
   }
 
   /** Bounded-round HITS (hubs & authorities) in integer micro-units:
@@ -631,7 +730,7 @@ object Graph {
   def hits(edges: DataFrame, iters: Int = 2): DataFrame = {
     import org.apache.spark.sql.graft.CheckpointHandle
     require(iters >= 1, s"hits: iters must be >= 1, got $iters")
-    val (e, _) = preparePlain(edges)
+    val e = preparePlain(edges)
     // loop-invariant role cardinalities (driver scalars, like nNodes in
     // the rank loops)
     val nHub = e.select("src").distinct().count()
@@ -641,7 +740,7 @@ object Graph {
     var hCp = h // the checkpoint backing h (h itself may be a lazy rescale)
     var a: DataFrame = null
     var aCp: DataFrame = null
-    // ONE materialization per half-step ([[iterate]]'s r17 round shape):
+    // ONE materialization per half-step ([[iterateDistributed]]'s r17 round shape):
     // the UNSCALED aggregate checkpoints eagerly, the Σ probe reads its
     // blocks, and the rescale stays a LAZY projection over the checkpoint
     // (recomputed per read — one integer division, read at most twice) —
@@ -775,13 +874,16 @@ object Graph {
     * materializing; lineage stays intact, so a later recompute is slow
     * but correct).
     *
-    * Same count gate as [[iterate]]: when the doubled edge frame has at
-    * most [[LocalLoopMaxRows]] rows of integral, non-null ids, its
-    * `e.count()` barrier decides, the frame is collected once and
-    * unpersisted, and the min-label rounds run on the driver over dense
-    * int ids (monotone in the original ids, so the minima agree). The
-    * labels come back as a one-partition frame with the distributed
-    * path's column names and types, and the hook is a no-op.
+    * Same gate as the rank loops: the canonical undirected pairs are
+    * gathered straight off their dedup ([[gatherIntegral]], one job, no
+    * layout, no persist), and when their doubled count is at most
+    * [[LocalLoopMaxRows]] with integral, non-null ids, the min-label
+    * rounds run on the driver over dense int ids (monotone in the
+    * original ids, so the minima agree), each pair read in both
+    * directions. The labels come back as a one-partition frame with the
+    * distributed path's column names and types, and the hook is a no-op.
+    * Above the gate the doubled frame is laid out on `b`, persisted and
+    * counted for the distributed rounds.
     */
   def labelPropagateReleasable(edges: DataFrame,
       iters: Int = 3): (DataFrame, () => Unit) = {
@@ -798,13 +900,10 @@ object Graph {
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .where(col("a") =!= col("b")).distinct()
-    val e = und.unionAll(und.select(col("b").as("a"), col("a").as("b")))
-      .repartition(col("b")) // the label join probes on b each round
-      .persist()
-    collectIntegral(e, e.count(), localMaxRows) match {
+    val doubled = und.unionAll(und.select(col("b").as("a"), col("a").as("b")))
+    gatherIntegral(und, localMaxRows / 2) match {
       case Some(Array(a, b)) =>
-        val nodeField = e.schema("a").copy(name = "node")
-        e.unpersist(blocking = false)
+        val nodeField = doubled.schema("a").copy(name = "node")
         val (ids, ai, bi) = denseIds(a, b)
         var label = Array.range(0, ids.length)
         for (_ <- 0 until iters) {
@@ -812,15 +911,20 @@ object Graph {
           var k = 0
           while (k < ai.length) {
             if (label(bi(k)) < next(ai(k))) next(ai(k)) = label(bi(k))
+            if (label(ai(k)) < next(bi(k))) next(bi(k)) = label(ai(k))
             k += 1
           }
           label = next
         }
-        (oneTaskFrame(e.sparkSession,
+        (oneTaskFrame(und.sparkSession,
           StructType(Seq(nodeField, nodeField.copy(name = "label"))),
           ids, label.map(v => ids(v))),
           None)
       case _ =>
+        val e = doubled
+          .repartition(col("b")) // the label join probes on b each round
+          .persist()
+        e.count() // barrier: materialize before the rounds re-read it
         val (labels, release) = labelPropagateDistributed(e, iters)
         (labels, Some(release))
     }
@@ -847,7 +951,7 @@ object Graph {
           .select(col("node"),
             least(col("label"), coalesce(col("nl"), col("label"))).as("label"))
         // INTERMEDIATE rounds materialize in ONE job straight into
-        // constant-depth checkpoint blocks ([[iterate]]'s r17 round shape —
+        // constant-depth checkpoint blocks ([[iterateDistributed]]'s r17 round shape —
         // the old persist → count → truncate-copy paid an extra block-copy
         // job per round); the FINAL round stays a plain persisted frame so
         // the returned hook's unpersist is always safe, with its lineage
@@ -894,7 +998,9 @@ object Graph {
     * session carries only the community-sized result (its own release is
     * queued with the registry), never the intermediate state — repeated
     * invocations cannot accumulate label caches no matter how the caller
-    * uses the returned frame.
+    * uses the returned frame. When the propagation ran driver-local it
+    * pinned nothing, so there is no cache to drop and the rollup is
+    * returned as a plain lazy frame: no persist, no count, nothing queued.
     */
   def communities(edges: DataFrame, iters: Int = 3): DataFrame =
     communitiesCore(edges, iters)
@@ -906,12 +1012,14 @@ object Graph {
     val rollup = labels.groupBy(col("label").as("community"))
       .agg(count(lit(1)).as("n_members"), min("node").as("min_node"),
         max("node").as("max_node"))
-      .persist()
-    try rollup.count() // materialize BEFORE dropping the label cache
-    finally releaseLabels.foreach(_())
-    ReleaseRegistry.register("graph.communities")(
-      () => rollup.unpersist(blocking = false))
-    rollup
+    releaseLabels.fold(rollup) { release =>
+      val pinned = rollup.persist()
+      try pinned.count() // materialize BEFORE dropping the label cache
+      finally release()
+      ReleaseRegistry.register("graph.communities")(
+        () => pinned.unpersist(blocking = false))
+      pinned
+    }
   }
 
   /** Newman modularity decomposition of a community assignment: per
@@ -1631,7 +1739,7 @@ object Graph {
     import org.apache.spark.sql.graft.CheckpointHandle
     require(nSeeds > 0,
       s"personalizedPageRank: nSeeds must be positive, got $nSeeds")
-    val (e, _) = prepareUniform(edges)
+    val e = prepareUniform(edges)
     val contrib = uniformContrib(e)
     val srcs = e.select(col("src")).distinct()
     val nodes = e.select(col("src").as("node"))
@@ -1650,10 +1758,13 @@ object Graph {
       val nNodes = nodesF.count()
       val nSeedsActual = math.min(nSeeds.toLong, nNodes)
       // per-seed teleport: two truncating divisions, in this exact order
-      // (the oracle replays the same parenthesization)
+      // (the oracle replays the same parenthesization); overflow-checked
+      // like [[rankBase]], so a large dampDen throws instead of wrapping
       val tele =
         if (nSeedsActual == 0) 0L
-        else ((dampDen - dampNum) * nNodes * Unit_ / dampDen) / nSeedsActual
+        else Math.multiplyExact(Math.multiplyExact(
+          Math.subtractExact(dampDen, dampNum), nNodes), Unit_) / dampDen /
+          nSeedsActual
       current = nodesF.withColumn("r", lit(Unit_)).persist()
       for (_ <- 1 to iters) {
         val r = current
@@ -1662,15 +1773,15 @@ object Graph {
           .agg(coalesce(sum(col("r")), lit(0L))).head().getLong(0)
         val extra =
           if (nSeedsActual == 0) 0L
-          else dampNum * (dang / nSeedsActual) / dampDen
-        // ONE materialization per round ([[iterate]]'s r17 round shape):
+          else Math.multiplyExact(dampNum, dang / nSeedsActual) / dampDen
+        // ONE materialization per round ([[iterateDistributed]]'s r17 round shape):
         // eager truncate into constant-depth checkpoint blocks replaces the
         // persist → count → truncate-copy → unpersist sequence
         val next = Checkpoints.truncate(
           r.select(col("node"), col("dng"), col("seed"))
             .join(ct, Seq("node"), "left")
             .select(col("node"), col("dng"), col("seed"),
-              (when(col("seed"), lit(tele + extra)).otherwise(lit(0L)) +
+              (when(col("seed"), lit(Math.addExact(tele, extra))).otherwise(lit(0L)) +
                 expr(s"($dampNum * coalesce(c, 0L)) div $dampDen")).as("r")))
         if (!liveCheckpoint.exists(_ eq r)) r.unpersist()
         liveCheckpoint.foreach(c => CheckpointHandle.release(c))

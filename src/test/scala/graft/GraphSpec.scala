@@ -606,28 +606,53 @@ class GraphSpec extends SparkSpec {
   private def typesOf(df: org.apache.spark.sql.DataFrame) =
     df.schema.map(f => (f.name, f.dataType))
 
-  /** `cases` generated graphs (fixed seed, no shrinking; together they
-    * must show every shape [[shapes]] names): the loop run with
-    * the gate forced open (`Long.MaxValue`, driver-local rounds) and shut
-    * (0, distributed rounds) must return bit-identical frames — same
-    * column names and types, same rows — and the same rounds-run count.
-    * `run(edges, gate)` returns (frame, rounds run, release-all hook).
+  /** A `src` that [[edgeFrame]] turns into a null. */
+  private val NullSrc = Long.MinValue
+
+  /** A fixed graph with null-`src` edges, one of them the only edge into
+    * node 5. The uniform and weighted preps' out-degree joins drop such
+    * rows while the gate counts the pairs before that join, so the gate
+    * must send the graph down the distributed path whole.
+    */
+  private val NullSrcGraph: Edges =
+    Seq((1L, 2L, 3L), (2L, 3L, 1L), (3L, 1L, 2L), (NullSrc, 3L, 4L), (NullSrc, 5L, 1L))
+
+  /** `g` as a `(src, dst, w)` frame, with [[NullSrc]] as a null `src`. */
+  private def edgeFrame(g: Edges) = {
+    import org.apache.spark.sql.functions.{lit, when}
+    g.toDF("src", "dst", "w")
+      .withColumn("src", when($"src" =!= NullSrc, $"src").otherwise(lit(null)))
+  }
+
+  /** [[NullSrcGraph]] plus `cases` generated graphs (fixed seed, no
+    * shrinking; together they must show every shape [[shapes]] names):
+    * the loop run with the gate forced open (`Long.MaxValue`, driver-local
+    * rounds) and shut (0, distributed rounds) must return bit-identical
+    * frames — same column names and types, same rows — and the same
+    * rounds-run count. `run(edges, gate)` returns (frame, rounds run,
+    * release-all hook).
     */
   private def bothPathsAgree(cases: Int)(
       run: (Edges, Long) => (org.apache.spark.sql.DataFrame, Int, () => Unit)): Unit = {
     import org.scalacheck.{Prop, Test => Check}
     import org.scalacheck.rng.Seed
-    val seen = scala.collection.mutable.Set.empty[String]
-    val prop = Prop.forAllNoShrink(genEdges) { g =>
-      seen ++= shapes(g)
+    def agree(g: Edges): (Boolean, String) = {
       val (lf, li, lrel) = run(g, Long.MaxValue)
       val (df, di, drel) = run(g, 0L)
       val (lRows, dRows) = (rowsOf(lf), rowsOf(df))
       val ok = li == di && typesOf(lf) == typesOf(df) && lRows == dRows
       lrel(); drel()
       graft.plans.ReleaseRegistry.drain()
-      Prop(ok) :| s"edges=$g\nlocal ($li rounds, ${typesOf(lf)}): $lRows\n" +
-        s"distributed ($di rounds, ${typesOf(df)}): $dRows"
+      (ok, s"edges=$g\nlocal ($li rounds, ${typesOf(lf)}): $lRows\n" +
+        s"distributed ($di rounds, ${typesOf(df)}): $dRows")
+    }
+    val (nullOk, nullMsg) = agree(NullSrcGraph)
+    assert(nullOk, nullMsg)
+    val seen = scala.collection.mutable.Set.empty[String]
+    val prop = Prop.forAllNoShrink(genEdges) { g =>
+      seen ++= shapes(g)
+      val (ok, msg) = agree(g)
+      Prop(ok) :| msg
     }
     val res = Check.check(Check.Parameters.default.withMinSuccessfulTests(cases)
       .withInitialSeed(Seed(20261018L)).withWorkers(1), prop)
@@ -637,7 +662,7 @@ class GraphSpec extends SparkSpec {
       "generated graphs missed a required shape")
   }
 
-  private def plainEdges(g: Edges) = g.map(e => (e._1, e._2)).toDF("src", "dst")
+  private def plainEdges(g: Edges) = edgeFrame(g).select($"src", $"dst")
 
   private def rank(r: Graph.RankResult) = (r.ranks, r.itersRun, r.releaseAll)
 
@@ -667,8 +692,7 @@ class GraphSpec extends SparkSpec {
 
   test("local vs distributed: pageRankWeighted is bit-identical") {
     bothPathsAgree(PropertyCases) { (g, gate) =>
-      rank(Graph.pageRankWeightedCore(g.toDF("src", "dst", "w"), 3, 85L,
-        100L, gate))
+      rank(Graph.pageRankWeightedCore(edgeFrame(g), 3, 85L, 100L, gate))
     }
   }
 
@@ -719,33 +743,40 @@ class GraphSpec extends SparkSpec {
     assert(Graph.pageRankWeightedRanks(wedges).count() === 6L)
     assert(Graph.katzCentrality(edges).count() === 6L)
     assert(Graph.labelPropagate(edges).count() === 6L)
+    // the rollup over driver-local labels has no label cache to drop
+    // before it, so it skips its own persist + count barrier
+    assert(Graph.communitiesCore(edges, 3).count() === 2L)
+    assert(Graph.communities(edges).count() === 2L)
     awaitBaseline("the local loops")
     assert(ReleaseRegistry.pending === 0)
-    // the community rollups pin their own small results until a drain
-    assert(Graph.communities(edges).count() === 2L)
+    // modularity pins its own small result until a drain
     assert(Graph.modularity(edges).count() === 2L)
     ReleaseRegistry.drain()
-    awaitBaseline("the rollups after drain")
+    awaitBaseline("modularity after drain")
     assert(ReleaseRegistry.pending === 0)
+  }
+
+  /** `run` must fail with an [[ArithmeticException]] in its cause chain,
+    * queue no release hook, and — a failed loop frees what it pinned: no
+    * caller ever gets a hook for it — leave the persisted RDDs at their
+    * baseline after a drain.
+    */
+  private def failsLoudlyAndFreesPins(what: String)(run: => Unit): Unit = {
+    import graft.plans.ReleaseRegistry
+    val awaitBaseline = persistedBaseline()
+    val err = intercept[Exception](run)
+    val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(_.isInstanceOf[ArithmeticException]),
+      s"$what: expected an arithmetic overflow, got $err")
+    assert(ReleaseRegistry.pending === 0, s"$what: the failure queued a hook")
+    ReleaseRegistry.drain()
+    awaitBaseline(s"$what: the failed loop")
   }
 
   test("rank loops: an overflowing recurrence fails loudly on both paths") {
     // base = 10⁶·1 div (10¹³+1) = 0, but 10¹³ · (10⁶ contribution) > 2⁶³:
     // the local kernel's Math.multiplyExact and Spark's ANSI multiply must
     // both throw instead of wrapping
-    // — and a failed distributed loop frees what it pinned: no caller
-    // ever gets a hook for it, so neither a drain nor anything else could
-    import graft.plans.ReleaseRegistry
-    def failsLoudlyAndFreesPins(what: String)(run: => Unit): Unit = {
-      val awaitBaseline = persistedBaseline()
-      val err = intercept[Exception](run)
-      val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
-      assert(chain.exists(_.isInstanceOf[ArithmeticException]),
-        s"$what: expected an arithmetic overflow, got $err")
-      assert(ReleaseRegistry.pending === 0, s"$what: the failure queued a hook")
-      ReleaseRegistry.drain()
-      awaitBaseline(s"$what: the failed loop")
-    }
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
     for (gate <- Seq(Long.MaxValue, 0L)) failsLoudlyAndFreesPins(s"gate $gate") {
       Graph.pageRankCore(edges, 3, 10000000000000L, 10000000000001L, -1L,
@@ -755,6 +786,83 @@ class GraphSpec extends SparkSpec {
     failsLoudlyAndFreesPins("personalizedPageRank") {
       Graph.personalizedPageRank(edges, 1, 3, 10000000000000L, 10000000000001L)
         .collect()
+    }
+  }
+
+  test("personalizedPageRank: an overflowing teleport term fails loudly") {
+    // T = ((10¹³ − 1)·3·10⁶ div 10¹³) div 1: the product passes 2⁶³, and
+    // unchecked it wrapped into a rank of −689348 for every node
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
+    failsLoudlyAndFreesPins("personalizedPageRank teleport") {
+      Graph.personalizedPageRank(edges, nSeeds = 1, iters = 1, dampNum = 1L,
+        dampDen = 10000000000000L).collect()
+    }
+  }
+
+  // ---- the local-loop gate's gather ----
+
+  /** A `(x, y = 2x)` frame whose partition `p` holds `sizes(p)` rows, the
+    * values 0, 1, 2, … in partition order.
+    */
+  private def partitioned(sizes: Seq[Int]): org.apache.spark.sql.DataFrame = {
+    val starts = sizes.scanLeft(0)(_ + _)
+    spark.sparkContext
+      .parallelize(sizes.indices.map(p => (starts(p), starts(p + 1))), sizes.size)
+      .flatMap { case (from, until) => (from until until).map(_.toLong) }
+      .toDF("x").select($"x", ($"x" * 2).as("y"))
+  }
+
+  /** `(gathered columns as Seqs, jobs the gather started)`. */
+  private def gathered(df: org.apache.spark.sql.DataFrame, maxRows: Long) = {
+    var out: Option[Array[Array[Long]]] = None
+    val jobs = jobsStartedBy { out = Graph.gatherIntegral(df, maxRows) }
+    (out.map(_.map(_.toSeq).toSeq), jobs.size)
+  }
+
+  test("gatherIntegral: ships within the cap in one job, or a second for skew") {
+    val all = (0L until 100L).toSeq
+    val expect = Some(Seq(all, all.map(_ * 2)))
+    // balanced, under the cap: every partition ships its share at once
+    assert(gathered(partitioned(Seq(25, 25, 25, 25)), 100L) === ((expect, 1)))
+    // one partition over its share (100 / 4), total within the cap: it
+    // withholds its rows, and a second job over it alone ships them
+    assert(gathered(partitioned(Seq(70, 10, 10, 10)), 100L) === ((expect, 2)))
+    // every partition within the cap, the total one over it: no rows
+    assert(gathered(partitioned(Seq(25, 25, 25, 25)), 99L) === ((None, 1)))
+    // a null anywhere keeps the frame off the driver-local path
+    val withNull = Seq(Some(1L), None, Some(3L)).toDF("x")
+    assert(gathered(withNull, 100L)._1 === None)
+    // non-integral columns are refused without a job
+    assert(gathered(Seq(("a", 1L)).toDF("s", "n"), 100L) === ((None, 0)))
+    // empty, with partitions and without
+    assert(gathered(partitioned(Seq(0, 0, 0)), 100L) === ((Some(Seq(Nil, Nil)), 1)))
+    assert(gathered(Seq.empty[(Long, Long)].toDF("a", "b"), 0L)._1 ===
+      Some(Seq(Nil, Nil)))
+  }
+
+  test("driver-local loops start no persisting job: gather only, jobs pinned") {
+    import org.apache.spark.storage.StorageLevel
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (10L, 11L))
+      .toDF("src", "dst")
+    def persisting(js: org.apache.spark.scheduler.SparkListenerJobStart) =
+      js.stageInfos.exists(_.rddInfos.exists(_.storageLevel != StorageLevel.NONE))
+    def jobsOf(gate: Long)(run: Long => Unit) = {
+      val awaitBaseline = persistedBaseline()
+      val jobs = jobsStartedBy(run(gate))
+      graft.plans.ReleaseRegistry.drain()
+      awaitBaseline(s"gate $gate")
+      (jobs.size, jobs.count(persisting))
+    }
+    val loops = Seq[(String, Long => Unit)](
+      "pageRankCore" -> (gate =>
+        Graph.pageRankCore(edges, 3, 85L, 100L, -1L, gate).releaseAll()),
+      "labelPropagateCore" -> (gate =>
+        Graph.labelPropagateCore(edges, 3, gate)._2.foreach(_())))
+    for ((name, run) <- loops) {
+      // the distinct's shuffle stage and the gather: nothing else
+      assert(jobsOf(Long.MaxValue)(run) === ((2, 0)), name)
+      // the shut gate builds the persisted layout (the listener sees it)
+      assert(jobsOf(0L)(run)._2 > 0, s"$name, gate shut")
     }
   }
 }

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 
 import graft.sources.Sources
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.types.{BinaryType, StringType}
 
@@ -165,41 +164,12 @@ class SourcesSpec extends SparkSpec {
     }
   }
 
-  /** Spark jobs `body` starts on this thread: a listener collects the
-    * thread's jobs by job group, and a marker job after `body` shows
-    * when the (ordered, asynchronous) listener queue has caught up.
-    */
-  private def jobsStartedBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"jobs-${System.nanoTime()}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (js.properties != null && js.properties.getProperty("spark.jobGroup.id") == group)
-          seen.add(Option(js.properties.getProperty("spark.job.description")).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "body")
-    try {
-      body
-      sc.setJobDescription("marker")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (!seen.contains("marker") && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(seen.contains("marker"), "listener never saw the marker job")
-      seen.size - 1
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("schema cache: a second load of an unchanged table starts no Spark job") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-schema-jobs").toString
     (1 to 10).toDF("x").write.parquet(s"$dir/t.parquet")
-    assert(jobsStartedBy(Tables.load(spark, dir, "t")) >= 1, "the first load infers")
-    assert(jobsStartedBy(Tables.load(spark, dir, "t")) === 0)
+    assert(jobsStartedBy(Tables.load(spark, dir, "t")).nonEmpty, "the first load infers")
+    assert(jobsStartedBy(Tables.load(spark, dir, "t")).isEmpty)
   }
 
   test("schema cache: overwriting a table with a new schema shows on the next load") {
