@@ -409,7 +409,7 @@ object SparkEntry {
       val res = Graph.pageRankUntil(Graph.tradeEdges(s, d),
         epsMicro = 0L, maxIters = 4)
       if (res.pinned)
-        graft.plans.ReleaseRegistry.register("graph.pagerank_until")(res.release)
+        graft.plans.Pins.queue("graph.pagerank_until")(res.release)
       res.ranks
     }),
     // pairwise two-sample KS statistic over per-doc lengths (n_chars):

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.plans.Pins
 
 /** End-to-end corpus curation: the canonical LLM training-data pipeline as
   * ONE declarative plan — normalize → quality gate → language gate → exact
@@ -181,13 +182,11 @@ object CorpusPipeline {
     //    prefix (measured 2.6x slower end-to-end at sf0.1). persist, not
     //    localCheckpoint, for the same AQE reason as
     //    Dedup.resolveClusters; blocks stay subject to LRU eviction.
-    val exactKeep = exactDedup(langed).persist()
-    // intermediates release in the finally — without it a failed near-dup
-    // stage leaks one corpus-scale pinned cache per retry in a long-lived
-    // session
-    var releaseLabels: () => Unit = () => ()
-    try {
-      exactKeep.count()
+    // intermediates go with the scope, also when a stage fails — without
+    // that a failed near-dup stage leaks one corpus-scale pinned cache per
+    // retry in a long-lived session
+    Pins.scope { s =>
+      val (exactKeep, _) = s.materialize(exactDedup(langed))
       // 5. near-dup resolution on the gated survivors: MinHash-LSH banded
       //    candidates (the UNBLOCKED scale path — sum(bucket²), not
       //    sum(block²); catches cross-source duplicates a blocking key
@@ -197,7 +196,7 @@ object CorpusPipeline {
       val pairs = Dedup.minhashPairs(exactKeep, jaccard)
       val (resolved, release) =
         Dedup.resolveClustersReleasable(exactKeep.select("doc_id"), pairs)
-      releaseLabels = release
+      s.defer(release)
       // anti-join the LOSERS (keep=false), not inner-join the keepers: the
       // loser set is bounded by the near-dup pair endpoints — pair-scale,
       // not corpus-scale — so at 100 TB this is a broadcast-able filter of
@@ -218,18 +217,11 @@ object CorpusPipeline {
       // 7. deterministic split assignment. The persisted result is the
       // ONE frame this pipeline leaves pinned — queue its release so
       // repeated invocations in a long-lived session don't strand one
-      // result cache each (the caller may still unpersist sooner)
-      val out = withSplit(subGated).persist()
-      out.count()
-      graft.plans.ReleaseRegistry.register("corpus.curate_result")(
-        () => out.unpersist(blocking = false))
-      out
-    } finally {
-      // result (when reached) is materialized — dropping the intermediate
-      // caches is safe (lineage stays intact, so an evicted result
-      // recomputes slowly but correctly)
-      exactKeep.unpersist(blocking = false)
-      releaseLabels()
+      // result cache each (the caller may still unpersist sooner). Once
+      // it is materialized, dropping the intermediate caches is safe
+      // (lineage stays intact, so an evicted result recomputes slowly
+      // but correctly)
+      Pins.materialize("corpus.curate_result", withSplit(subGated))._1
     }
   }
 
@@ -347,26 +339,22 @@ object CorpusPipeline {
         // gates touch ONLY the appended slice; survivor texts re-derive
         // from the current input (immutable under the append-only contract)
         val gatedNew = gated(appended, minTokens, keepLang)
-        val prevGated = gated(
-          docs.join(prev.select("doc_id"), Seq("doc_id"), "left_semi"),
-          minTokens, keepLang).persist()
-        var releaseLabels: () => Unit = () => ()
-        val newExact = {
-          // exact dedup: smallest new id per hash, then drop anything
-          // whose hash was EVER seen — the `_seenh` sidecar covers
-          // dropped docs too, so an exact copy of a previously discarded
-          // document cannot re-enter the corpus
-          val newHashed = gatedNew.withColumn("_h", md5(col("text")))
-          newHashed
+        // exact dedup: smallest new id per hash, then drop anything
+        // whose hash was EVER seen — the `_seenh` sidecar covers
+        // dropped docs too, so an exact copy of a previously discarded
+        // document cannot re-enter the corpus
+        val newHashed = gatedNew.withColumn("_h", md5(col("text")))
+        Pins.scope { s =>
+          val prevGated = s.persist(gated(
+            docs.join(prev.select("doc_id"), Seq("doc_id"), "left_semi"),
+            minTokens, keepLang))
+          val newExact = s.persist(newHashed
             .groupBy(col("_h"))
             .agg(min_by(struct(newHashed.columns.map(col).toIndexedSeq: _*),
               col("doc_id")).as("_r"))
             .select(col("_r.*"), col("_h"))
             .join(seenH, Seq("_h"), "left_anti")
-            .drop("_h")
-            .persist()
-        }
-        try {
+            .drop("_h"))
           prevGated.count()
           newExact.count()
           // near-dup: pairs over survivors ∪ fresh docs; cluster-min keep
@@ -376,7 +364,7 @@ object CorpusPipeline {
           val pairs = Dedup.minhashPairs(union, jaccard)
           val (resolved, release) =
             Dedup.resolveClustersReleasable(union.select("doc_id"), pairs)
-          releaseLabels = release
+          s.defer(release)
           val newSurvivors = newExact.join(
             resolved.where(col("keep")).select("doc_id"), Seq("doc_id"), "left_semi")
           // substring gate on the appended slice: election within the
@@ -395,10 +383,6 @@ object CorpusPipeline {
             .unionByName(spanHashes(newExact.select(col("doc_id"), col("text")), spanK))
             .distinct()
           commitState(result, docs.select("doc_id"), allSeenH, allSeenSp)
-        } finally {
-          prevGated.unpersist(blocking = false)
-          newExact.unpersist(blocking = false)
-          releaseLabels()
         }
       case None =>
         val full = curate(docs, minTokens, keepLang, jaccard, spanK, maxDupPct)

@@ -2,7 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
+
+import graft.plans.Pins
 
 /** Deduplication operators for document corpora: exact, MinHash+LSH
   * near-dup, SimHash. Core training-data-pipeline ops (north star); the
@@ -435,7 +437,7 @@ object Dedup {
     */
   def resolveClusters(docs: DataFrame, pairs: DataFrame, maxIter: Int = 10): DataFrame = {
     val (out, release) = resolveClustersReleasable(docs, pairs, maxIter)
-    graft.plans.ReleaseRegistry.register("dedup.resolve_clusters")(release)
+    Pins.queue("dedup.resolve_clusters")(release)
     out
   }
 
@@ -447,8 +449,7 @@ object Dedup {
     * releasing them would make recomputation impossible.
     */
   def resolveClustersReleasable(docs: DataFrame, pairs: DataFrame,
-      maxIter: Int = 10): (DataFrame, () => Unit) = {
-    import org.apache.spark.sql.graft.CheckpointHandle
+      maxIter: Int = 10): (DataFrame, () => Unit) = Pins.scope { s =>
     // materialize the (expensive) pair computation once BEFORE the
     // direction-doubling union — otherwise each union branch re-executes
     // the full candidate-generation plan. persist + count, NOT
@@ -457,8 +458,7 @@ object Dedup {
     // skewed candidate self-join (measured 30x slower on the blocked
     // n-gram join at sf0.1); a persisted frame materializes through the
     // normal adaptive path and the union branches read the cached blocks
-    val p = pairs.select(col("a"), col("b")).persist()
-    val nPairs = p.count()
+    val (p, nPairs) = s.materialize(pairs.select(col("a"), col("b")))
     // adaptive path choice on the (already materialized) edge count — the
     // same runtime-statistics trick AQE applies to joins. After good
     // blocking the dedup graph is usually TINY relative to the corpus
@@ -474,57 +474,72 @@ object Dedup {
       case LongType | IntegerType | ShortType | ByteType | StringType => true
       case _ => false
     })
-    if (smallGraph) {
-      val spark = docs.sparkSession
-      def less(x: Any, y: Any): Boolean = (x, y) match {
-        case (a: java.lang.Number, b: java.lang.Number) => a.longValue < b.longValue
-        case (a: String, b: String) =>
-          // match Spark's StringType ordering (UTF8String: unsigned UTF-8
-          // byte comparison), NOT Java's UTF-16 compareTo — they disagree
-          // on supplementary-plane characters, and the driver path must
-          // pick the same component minimum as the distributed min()
-          val (u, v) = (a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-            b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          var i = 0
-          while (i < u.length && i < v.length && u(i) == v(i)) i += 1
-          if (i < u.length && i < v.length) (u(i) & 0xff) < (v(i) & 0xff)
-          else u.length < v.length
-        case _ => false
-      }
-      // union-find with min-root union + path compression: the root of
-      // each set is its minimum member, matching the iterative path's
-      // min-label semantics exactly
-      val parent = scala.collection.mutable.HashMap.empty[Any, Any]
-      def find(x: Any): Any = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      val collected = p.collect()
-      collected.foreach { r =>
-        if (!r.isNullAt(0) && !r.isNullAt(1)) {
-          val (ra, rb) = (find(r.get(0)), find(r.get(1)))
-          if (ra != rb) {
-            if (less(ra, rb)) parent(rb) = ra else parent(ra) = rb
-          }
+    if (smallGraph) resolveOnDriver(s, docs, p, keyType)
+    else resolveDistributed(s, docs, p, maxIter)
+  }
+
+  /** [[resolveClustersReleasable]] for a pair frame `p` (pinned in `s`,
+    * materialized) small enough for a driver union-find; `p` is freed
+    * once collected and the hook is a no-op.
+    */
+  private def resolveOnDriver(s: Pins.Scope, docs: DataFrame,
+      p: DataFrame, keyType: DataType): (DataFrame, () => Unit) = {
+    val spark = docs.sparkSession
+    def less(x: Any, y: Any): Boolean = (x, y) match {
+      case (a: java.lang.Number, b: java.lang.Number) => a.longValue < b.longValue
+      case (a: String, b: String) =>
+        // match Spark's StringType ordering (UTF8String: unsigned UTF-8
+        // byte comparison), NOT Java's UTF-16 compareTo — they disagree
+        // on supplementary-plane characters, and the driver path must
+        // pick the same component minimum as the distributed min()
+        val (u, v) = (a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+          b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        var i = 0
+        while (i < u.length && i < v.length && u(i) == v(i)) i += 1
+        if (i < u.length && i < v.length) (u(i) & 0xff) < (v(i) & 0xff)
+        else u.length < v.length
+      case _ => false
+    }
+    // union-find with min-root union + path compression: the root of
+    // each set is its minimum member, matching the iterative path's
+    // min-label semantics exactly
+    val parent = scala.collection.mutable.HashMap.empty[Any, Any]
+    def find(x: Any): Any = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    val collected = p.collect()
+    collected.foreach { r =>
+      if (!r.isNullAt(0) && !r.isNullAt(1)) {
+        val (ra, rb) = (find(r.get(0)), find(r.get(1)))
+        if (ra != rb) {
+          if (less(ra, rb)) parent(rb) = ra else parent(ra) = rb
         }
       }
-      val nodes = collected.iterator
-        .flatMap(r => Iterator(r.get(0), r.get(1))).filter(_ != null).toSet
-      val labelRows: Seq[Row] = nodes.toSeq.map(k => Row(k, find(k)))
-      val schema = StructType(Seq(
-        StructField("ld", keyType), StructField("cluster", keyType)))
-      val labelsDf = spark.createDataFrame(
-        spark.sparkContext.parallelize(labelRows.toIndexedSeq, 1), schema)
-      p.unpersist(blocking = false)
-      val out = docs.select(col("doc_id"))
-        .join(broadcast(labelsDf), col("doc_id") === col("ld"), "left")
-        .select(col("doc_id"), coalesce(col("cluster"), col("doc_id")).as("cluster"))
-        .withColumn("keep", col("doc_id") === col("cluster"))
-      return (out, () => ())
     }
+    val nodes = collected.iterator
+      .flatMap(r => Iterator(r.get(0), r.get(1))).filter(_ != null).toSet
+    val labelRows: Seq[Row] = nodes.toSeq.map(k => Row(k, find(k)))
+    val schema = StructType(Seq(
+      StructField("ld", keyType), StructField("cluster", keyType)))
+    val labelsDf = spark.createDataFrame(
+      spark.sparkContext.parallelize(labelRows.toIndexedSeq, 1), schema)
+    s.release(p)
+    val out = docs.select(col("doc_id"))
+      .join(broadcast(labelsDf), col("doc_id") === col("ld"), "left")
+      .select(col("doc_id"), coalesce(col("cluster"), col("doc_id")).as("cluster"))
+      .withColumn("keep", col("doc_id") === col("cluster"))
+    (out, () => ())
+  }
+
+  /** [[resolveClustersReleasable]]'s distributed fixpoint over the pinned,
+    * materialized pair frame `p`, which is freed when `s` exits.
+    */
+  private def resolveDistributed(s: Pins.Scope, docs: DataFrame,
+      p: DataFrame, maxIter: Int): (DataFrame, () => Unit) = {
     val edges = p.unionAll(p.select(col("b").as("a"), col("a").as("b")))
     // active-set iteration: only docs that appear in an edge can ever move
     // off their own label, so the fixpoint loop runs on the (much smaller)
@@ -546,67 +561,62 @@ object Dedup {
     // checkpoint's non-adaptive materialization cost is paid rarely and
     // on a cached, shallow plan.
     val truncateEvery = 5
-    var prevIter: Option[DataFrame] = None
-    var liveCheckpoint: Option[DataFrame] = None
+    // the latest plain-persisted label frame and the live checkpoint
+    var persisted: Option[DataFrame] = None
+    var checkpoint: Option[DataFrame] = None
     while (!converged && i < maxIter) {
       val nbrMin = edges.join(labels, edges("b") === labels("doc_id"))
         .groupBy(edges("a").as("nbr_doc")).agg(min("cluster").as("nbr_cluster"))
       // carry old + new label in one materialized pass: the convergence
       // check then reads the cached result instead of re-joining
-      var updated = labels
+      val updated = s.persist(labels
         .join(nbrMin, labels("doc_id") === nbrMin("nbr_doc"), "left")
         .select(labels("doc_id"), col("cluster").as("old_cluster"),
-          least(col("cluster"), coalesce(col("nbr_cluster"), col("cluster"))).as("cluster"))
-        .persist()
+          least(col("cluster"), coalesce(col("nbr_cluster"), col("cluster"))).as("cluster")))
       val changed = updated.where(col("cluster") =!= col("old_cluster")).count()
+      val superseded = persisted
       if ((i + 1) % truncateEvery == 0) {
         // shallow (cache-fed) plan, so the checkpoint is cheap here
         // (reliable under `graft.checkpoint.dir`, local otherwise)
-        val snapshot = graft.plans.Checkpoints.truncate(updated)
-        updated.unpersist(blocking = false)
+        val snapshot = s.truncate(updated)
+        s.release(updated)
         // only NOW is the previous checkpoint safe to release: the
         // persist-only frames of the intervening rounds recompute
         // through it if their blocks get LRU-evicted, so releasing it
         // while it was still the lineage root would turn an eviction
         // into a fatal "checkpoint block not found". The new snapshot is
         // eager and self-contained — nothing references the old one.
-        liveCheckpoint.foreach(c => CheckpointHandle.release(c))
-        liveCheckpoint = Some(snapshot)
-        updated = snapshot
+        checkpoint.foreach(s.release)
+        checkpoint = Some(snapshot)
+        persisted = None
+        labels = snapshot.select("doc_id", "cluster")
+      } else {
+        persisted = Some(updated)
+        labels = updated.select("doc_id", "cluster")
       }
-      prevIter.foreach { f =>
-        // superseded plain-persist frames release eagerly; the live
-        // checkpoint's blocks must survive until the next truncation
-        if (!liveCheckpoint.exists(_ eq f)) f.unpersist(blocking = false)
-      }
-      prevIter = Some(updated)
-      labels = updated.select("doc_id", "cluster")
+      // the superseded plain-persisted frame releases eagerly; the live
+      // checkpoint's blocks must survive until the next truncation
+      superseded.foreach(s.release)
       converged = changed == 0
       i += 1
     }
-    // the final labels checkpoint must stay alive (the returned plan reads
-    // it); the pairs cache is no longer needed once iteration ends. Unlike
-    // a checkpoint release, unpersisting a cached frame is safe even if
+    // the final labels stay pinned (the returned plan reads them); the
+    // pairs cache goes with the scope once iteration ends. Unlike a
+    // checkpoint release, unpersisting a cached frame is safe even if
     // maxIter <= 0 left `labels` reading p — the lineage is intact and
     // would simply recompute
-    p.unpersist(blocking = false)
     val out = docs.select(col("doc_id"))
       .join(labels.select(col("doc_id").as("ld"), col("cluster")),
         col("doc_id") === col("ld"), "left")
       .select(col("doc_id"), coalesce(col("cluster"), col("doc_id")).as("cluster"))
       .withColumn("keep", col("doc_id") === col("cluster"))
-    val release: () => Unit = () => prevIter.foreach { f =>
-      if (CheckpointHandle.rddOf(f).isEmpty) f.unpersist(blocking = false)
-    }
-    // the live checkpoint (when the fixpoint crossed a truncation round)
-    // is unreachable from any caller's release() — its blocks ARE the
-    // final labels, so freeing it invalidates the returned plan. Queue it
-    // on the registry's invalidating tier: the session host drains it
-    // only after materializing every outstanding result.
-    liveCheckpoint.foreach { c =>
-      graft.plans.ReleaseRegistry.registerInvalidating(
-        "dedup.resolve_checkpoint")(() => CheckpointHandle.release(c))
-    }
+    // the hook frees the final persisted frame; the live checkpoint (when
+    // the fixpoint crossed a truncation round) IS the final labels or
+    // their lineage root, so freeing it invalidates the returned plan: it
+    // goes to the registry's invalidating tier, drained only after every
+    // outstanding result is materialized
+    val (release, _) = s.handOff("dedup.resolve_checkpoint",
+      persisted.toSeq ++ checkpoint: _*)
     (out, release)
   }
 

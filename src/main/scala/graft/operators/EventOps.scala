@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.plans.Pins
 
 /** Event-table operators: time bucketing, JSON extraction, batch
   * sessionization (gaps-and-islands). The reference has no streaming or
@@ -218,12 +219,9 @@ object EventOps {
     // persisted because the aggregate feeds BOTH the span min/max and the
     // densify join — unpersisted, the events scan + (type,hour) shuffle
     // would execute twice per run
-    val hourly = Tables.events(spark, dir)
+    val hourly = Pins.persist("eventops.seasonality_hourly", Tables.events(spark, dir)
       .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hb"))
-      .agg(count(lit(1)).as("y"))
-      .persist()
-    graft.plans.ReleaseRegistry.register("eventops.seasonality_hourly")(
-      () => hourly.unpersist(blocking = false))
+      .agg(count(lit(1)).as("y")))
     val dense = hourly.groupBy("event_type")
       .agg(min("hb").as("lo"), max("hb").as("hi"))
       .select(col("event_type"), explode(expr(
@@ -641,12 +639,9 @@ object EventOps {
     val par = spark.sparkContext.defaultParallelism
     val ev = events.select(col("event_id"), col("event_type"), col("value"))
 
-    val ranged = ev.repartitionByRange(par, col("event_type"), col("value"))
-      .withColumn("pid", spark_partition_id())
-      .persist()
-    ranged.count()
-    graft.plans.ReleaseRegistry.register("eventops.quantile_norm_grouped")(
-      () => ranged.unpersist(blocking = false))
+    val (ranged, _) = Pins.materialize("eventops.quantile_norm_grouped",
+      ev.repartitionByRange(par, col("event_type"), col("value"))
+        .withColumn("pid", spark_partition_id()))
     val offs = ranged.groupBy("pid", "event_type").agg(count(lit(1)).as("cnt"))
       .withColumn("off", coalesce(
         sum("cnt").over(Window.partitionBy("event_type").orderBy("pid")
@@ -660,13 +655,10 @@ object EventOps {
       .withColumn("pr", when(col("n_type") === 1, lit(0.0))
         .otherwise((col("rk") - 1).cast("double") / (col("n_type") - 1).cast("double")))
 
-    val pooledRanged = ev.select(col("value"))
-      .repartitionByRange(par, col("value"))
-      .withColumn("pid", spark_partition_id())
-      .persist()
-    pooledRanged.count()
-    graft.plans.ReleaseRegistry.register("eventops.quantile_norm_pooled")(
-      () => pooledRanged.unpersist(blocking = false))
+    val (pooledRanged, _) = Pins.materialize("eventops.quantile_norm_pooled",
+      ev.select(col("value"))
+        .repartitionByRange(par, col("value"))
+        .withColumn("pid", spark_partition_id()))
     val poffs = pooledRanged.groupBy("pid").agg(count(lit(1)).as("cnt"))
       .withColumn("off", coalesce(
         sum("cnt").over(Window.orderBy("pid")
@@ -704,24 +696,18 @@ object EventOps {
     */
   def userRfm(spark: SparkSession, dir: String): DataFrame = {
     val par = spark.sparkContext.defaultParallelism
-    val perUser = Tables.events(spark, dir)
+    // barrier + the quintile divisor
+    val (perUser, nUsers) = Pins.materialize("eventops.user_rfm", Tables.events(spark, dir)
       .groupBy("user_id").agg(
         max(col("ts")).as("last_ts"),
         count(lit(1)).as("n_events"),
-        sum(expr("cast(round(value * 100) as bigint)")).as("value_cents"))
-      .persist()
-    val nUsers = perUser.count() // barrier + the quintile divisor
-    graft.plans.ReleaseRegistry.register("eventops.user_rfm")(
-      () => perUser.unpersist(blocking = false))
+        sum(expr("cast(round(value * 100) as bigint)")).as("value_cents")))
 
     def quintile(metric: org.apache.spark.sql.Column, name: String): DataFrame = {
-      val ranged = perUser.select(col("user_id"), metric.as("m"))
-        .repartitionByRange(par, col("m"), col("user_id"))
-        .withColumn("pid", spark_partition_id())
-        .persist()
-      ranged.count()
-      graft.plans.ReleaseRegistry.register(s"eventops.user_rfm_$name")(
-        () => ranged.unpersist(blocking = false))
+      val (ranged, _) = Pins.materialize(s"eventops.user_rfm_$name",
+        perUser.select(col("user_id"), metric.as("m"))
+          .repartitionByRange(par, col("m"), col("user_id"))
+          .withColumn("pid", spark_partition_id()))
       val offs = ranged.groupBy("pid").agg(count(lit(1)).as("cnt"))
         .withColumn("off", coalesce(
           sum("cnt").over(Window.orderBy("pid")

@@ -5,9 +5,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import scala.util.control.NonFatal
-
-import graft.plans.{Checkpoints, ReleaseRegistry}
+import graft.plans.Pins
 
 /** Graph analytics over relational edge lists — PageRank as the flagship
   * iterative-propagation primitive (the same shape serves label
@@ -43,11 +41,15 @@ import graft.plans.{Checkpoints, ReleaseRegistry}
   * so the two paths return bit-identical frames (see [[iterateLocal]]).
   * Only above the gate is the `src`-partitioned, persisted layout built.
   *
-  * Lifecycle: every public entry either returns a [[RankResult]] with
-  * explicit release hooks or (the plain-`DataFrame` conveniences)
-  * registers those hooks with [[graft.plans.ReleaseRegistry]], so a
-  * long-lived session's host can drain pinned state after materializing
-  * results instead of stranding one edge layout + rank cache per call.
+  * Lifecycle: every pin goes through [[graft.plans.Pins]]. A loop runs in
+  * one [[graft.plans.Pins.Scope]]: each round frees its superseded
+  * generation through the scope, a loop that throws frees everything it
+  * pinned, and at the end the scope hands the state the returned plan
+  * reads either to the caller as hooks (a [[RankResult]], the
+  * `*Releasable` pairs) or to the registry; the plain-`DataFrame`
+  * conveniences queue those hooks with the registry. So a long-lived
+  * session's host can drain pinned state after materializing results
+  * instead of stranding one edge layout + rank cache per call.
   */
 object Graph {
 
@@ -116,7 +118,7 @@ object Graph {
   def pageRank(edges: DataFrame, iters: Int = 3,
       dampNum: Long = 85L, dampDen: Long = 100L): DataFrame = {
     val res = pageRankReleasable(edges, iters, dampNum, dampDen)
-    if (res.pinned) ReleaseRegistry.register("graph.pagerank")(res.release)
+    if (res.pinned) Pins.queue("graph.pagerank")(res.release)
     res.ranks
   }
 
@@ -150,10 +152,11 @@ object Graph {
       case Some(Array(src, dst)) =>
         iterateLocal(pairs, src, dst, outDegrees,
           (r, od) => r / od, iters, dampNum, dampDen, stopDeltaMicro)
-      case _ =>
-        val e = prepareUniform(edges)
-        iterateDistributed(e, uniformContrib(e), iters, dampNum, dampDen,
+      case _ => Pins.scope { s =>
+        val e = prepareUniform(s, edges)
+        iterateDistributed(s, e, uniformContrib(e), iters, dampNum, dampDen,
           stopDeltaMicro)
+      }
     }
   }
 
@@ -193,13 +196,14 @@ object Graph {
         iterateLocal(pairs, src, dst, (s, n) => normalizedWeights(s, w, n),
           (r, wn) => Math.multiplyExact(r, wn) / 1000000L,
           iters, dampNum, dampDen, stopDeltaMicro = -1L)
-      case _ =>
-        val e = prepareWeighted(pairs)
-        iterateDistributed(e,
+      case _ => Pins.scope { s =>
+        val e = prepareWeighted(s, pairs)
+        iterateDistributed(s, e,
           r => e.join(r, e("src") === r("node"))
             .select(col("dst").as("node"), expr("(r * wn) div 1000000L").as("c"))
             .groupBy("node").agg(sum("c").as("c")),
           iters, dampNum, dampDen, stopDeltaMicro = -1L)
+      }
     }
   }
 
@@ -209,21 +213,18 @@ object Graph {
       .groupBy("src", "dst").agg(sum("w").as("w"))
 
   /** Weighted edge prep for the distributed rounds: `(src, dst, wn)` laid
-    * out on `src`, persisted and counted. Same exchange discipline as
+    * out on `src`, pinned in `s` and counted. Same exchange discipline as
     * [[prepareUniform]]: the per-pair sum stays FIRST (map-side combined
     * over the raw stream), the `src` layout sits directly on its output,
     * and the out-weight aggregate + join then plan exchange-free on that
     * layout — 2 edge-scale exchanges instead of the first-draft 4.
     */
-  private def prepareWeighted(pairs: DataFrame): DataFrame = {
+  private def prepareWeighted(s: Pins.Scope, pairs: DataFrame): DataFrame = {
     val agg = pairs.repartition(col("src"))
     val outW = agg.groupBy("src").agg(sum("w").as("sw"))
-    val e = agg.join(outW, "src")
-      .select(col("src"), col("dst"),
-        expr("(w * 1000000L) div sw").as("wn"))
-      .persist()
-    e.count() // barrier: materialize before the iteration chain re-reads
-    e
+    // count barrier: materialize before the iteration chain re-reads
+    s.materialize(agg.join(outW, "src")
+      .select(col("src"), col("dst"), expr("(w * 1000000L) div sw").as("wn")))._1
   }
 
   /** [[pageRankWeighted]] as a plain frame, release hook queued with the
@@ -233,7 +234,7 @@ object Graph {
   def pageRankWeightedRanks(edges: DataFrame, iters: Int = 3,
       dampNum: Long = 85L, dampDen: Long = 100L): DataFrame = {
     val res = pageRankWeighted(edges, iters, dampNum, dampDen)
-    if (res.pinned) ReleaseRegistry.register("graph.pagerank_weighted")(res.release)
+    if (res.pinned) Pins.queue("graph.pagerank_weighted")(res.release)
     res.ranks
   }
 
@@ -256,18 +257,15 @@ object Graph {
     * still shrinks before any shuffle — at 100 TB the raw pair stream
     * is orders of magnitude bigger than the deduped set.
     *
-    * Returns the persisted frame, counted: the count is the barrier that
-    * materializes the layout before the rounds re-read it.
+    * Returns the frame pinned in `s`, counted: the count is the barrier
+    * that materializes the layout before the rounds re-read it.
     */
-  private def prepareUniform(edges: DataFrame): DataFrame = {
+  private def prepareUniform(s: Pins.Scope, edges: DataFrame): DataFrame = {
     val dedup = edges.select(col("src"), col("dst")).distinct()
       .repartition(col("src")) // iteration joins reuse this layout
-    val e = dedup
+    s.materialize(dedup
       .join(dedup.groupBy("src").agg(count(lit(1)).as("od")), "src")
-      .select(col("src"), col("dst"), col("od"))
-      .persist()
-    e.count() // barrier: materialize before the iteration chain re-reads
-    e
+      .select(col("src"), col("dst"), col("od")))._1
   }
 
   /** Uniform contribution: each node splits its rank equally over its
@@ -520,17 +518,21 @@ object Graph {
     * NEXT round's dangling mass, so later rounds pay no separate
     * dangling scan.
     *
-    * `e` arrives already persisted + counted; `contrib(r)` must return
+    * `e` arrives pinned in `s` and counted; `contrib(r)` must return
     * the aggregated `(node, c)` contribution table for rank table `r` —
     * the ONLY piece that differs between uniform and weighted PageRank.
     * `stopDeltaMicro < 0` disables the convergence check (fixed-iteration
     * mode pays no delta aggregate).
+    *
+    * Lifecycle: every generation is pinned in `s`, which frees the
+    * superseded one each round (the persisted seed or a checkpoint) and,
+    * if a round throws, everything the loop pinned. The edge layout, the
+    * node set and the final frame come back as the [[RankResult]] hooks.
     */
-  private def iterateDistributed(e: DataFrame,
+  private def iterateDistributed(s: Pins.Scope, e: DataFrame,
       contrib: DataFrame => DataFrame, iters: Int, dampNum: Long,
       dampDen: Long, stopDeltaMicro: Long,
       redistributeDangling: Boolean = true): RankResult = {
-    import org.apache.spark.sql.graft.CheckpointHandle
     // whether a node dangles (no out-edges) never changes — resolve it
     // ONCE as a flag carried on the rank table, so each iteration's
     // dangling mass is a scan of the cached ranks instead of a per-round
@@ -540,120 +542,80 @@ object Graph {
     val srcs = e.select(col("src")).distinct()
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
-    val nodesF = nodes.as("n")
+    // count barrier + the loop-invariant scalar
+    val (nodesF, nNodes) = s.materialize(nodes.as("n")
       .join(srcs.as("s"), col("n.node") === col("s.src"), "left")
-      .select(col("n.node").as("node"), col("s.src").isNull.as("dng"))
-      .persist()
-    var current: DataFrame = nodesF
-    // the live checkpoint backing `current` (if any); released only when
-    // superseded by a NEWER checkpoint
-    var liveCheckpoint: Option[DataFrame] = None
+      .select(col("n.node").as("node"), col("s.src").isNull.as("dng")))
+    var current = s.persist(nodesF.withColumn("r", lit(Unit_)))
     // dangling mass carried from the previous round's combined probe
     // (convergence mode only) — the round then pays no dangling scan
     var dangCarried: Option[Long] = None
     var i = 0
     var converged = false
-    try {
-      val nNodes = nodesF.count() // barrier + the loop-invariant scalar
-      current = nodesF.withColumn("r", lit(Unit_)).persist()
-      while (i < iters && !converged) {
-        i += 1
-        val r = current
-        val ct = contrib(r)
-        // one tiny job over the materialized rank table (or the carried
-        // value from the previous round's probe); both operands of the
-        // share are non-negative, so Scala's / == SQL's truncating div and
-        // the integer replay contract is untouched
-        // Katz-style recurrences keep β fixed instead of recycling dangling
-        // mass — skipping the probe saves one job per round there. Empty
-        // graph: no rows exist, but the scalar division must still not throw
-        val share =
-          if (!redistributeDangling || nNodes == 0) 0L
-          else dangCarried.getOrElse(r.where(col("dng"))
-            .agg(coalesce(sum(col("r")), lit(0L))).head().getLong(0)) / nNodes
-        val stepped = r.select(col("node"), col("dng"), col("r").as("r_old"))
-          .join(ct, Seq("node"), "left")
-          .select(col("node"), col("dng"), col("r_old"),
-            (lit(rankBase(dampNum, dampDen)) +
-              expr(s"($dampNum * (coalesce(c, 0L) + $share)) div $dampDen"))
-              .as("r"))
-        // ONE job materializes the round into constant-depth checkpoint
-        // blocks. Composed lazily instead, round i's plan nests every prior
-        // round's subtree and the DRIVER re-analyzes the growing tree for
-        // each of the round's actions: profiled on pagerank_until as wall
-        // 52 s vs task-wall 36 s vs CPU 21 s — the executors idle while
-        // Catalyst chews lineage. (Set `graft.checkpoint.dir` to trade the
-        // local copy for a RELIABLE checkpoint on a real cluster —
-        // [[graft.plans.Checkpoints]].) Fixed-iteration mode never reads
-        // r_old — drop it before materializing so the rank table stays lean.
-        val next = Checkpoints.truncate(
-          if (stopDeltaMicro >= 0L) stepped else stepped.drop("r_old"))
-        // release the superseded parent: round 1's plain-persisted seed
-        // unpersists; later rounds' checkpoint blocks free via their handle
-        if (!liveCheckpoint.exists(_ eq r)) r.unpersist()
-        liveCheckpoint.foreach(c => CheckpointHandle.release(c))
-        liveCheckpoint = Some(next)
-        current = next
-        if (stopDeltaMicro >= 0L) {
-          // combined probe over the materialized blocks: convergence delta
-          // (no extra join — the step carried its parent rank in r_old)
-          // plus the next round's dangling mass
-          val row = next.agg(
-            coalesce(sum(abs(col("r") - col("r_old"))), lit(0L)),
-            coalesce(sum(when(col("dng"), col("r"))), lit(0L))).head()
-          converged = row.getLong(0) <= stopDeltaMicro
-          dangCarried = Some(row.getLong(1))
-        }
+    while (i < iters && !converged) {
+      i += 1
+      val r = current
+      val ct = contrib(r)
+      // one tiny job over the materialized rank table (or the carried
+      // value from the previous round's probe); both operands of the
+      // share are non-negative, so Scala's / == SQL's truncating div and
+      // the integer replay contract is untouched
+      // Katz-style recurrences keep β fixed instead of recycling dangling
+      // mass — skipping the probe saves one job per round there. Empty
+      // graph: no rows exist, but the scalar division must still not throw
+      val share =
+        if (!redistributeDangling || nNodes == 0) 0L
+        else dangCarried.getOrElse(r.where(col("dng"))
+          .agg(coalesce(sum(col("r")), lit(0L))).head().getLong(0)) / nNodes
+      val stepped = r.select(col("node"), col("dng"), col("r").as("r_old"))
+        .join(ct, Seq("node"), "left")
+        .select(col("node"), col("dng"), col("r_old"),
+          (lit(rankBase(dampNum, dampDen)) +
+            expr(s"($dampNum * (coalesce(c, 0L) + $share)) div $dampDen"))
+            .as("r"))
+      // ONE job materializes the round into constant-depth checkpoint
+      // blocks. Composed lazily instead, round i's plan nests every prior
+      // round's subtree and the DRIVER re-analyzes the growing tree for
+      // each of the round's actions: profiled on pagerank_until as wall
+      // 52 s vs task-wall 36 s vs CPU 21 s — the executors idle while
+      // Catalyst chews lineage. (Set `graft.checkpoint.dir` to trade the
+      // local copy for a RELIABLE checkpoint on a real cluster —
+      // [[graft.plans.Checkpoints]].) Fixed-iteration mode never reads
+      // r_old — drop it before materializing so the rank table stays lean.
+      current = s.truncate(
+        if (stopDeltaMicro >= 0L) stepped else stepped.drop("r_old"))
+      // the superseded parent: round 1's persisted seed or a checkpoint
+      s.release(r)
+      if (stopDeltaMicro >= 0L) {
+        // combined probe over the materialized blocks: convergence delta
+        // (no extra join — the step carried its parent rank in r_old)
+        // plus the next round's dangling mass
+        val row = current.agg(
+          coalesce(sum(abs(col("r") - col("r_old"))), lit(0L)),
+          coalesce(sum(when(col("dng"), col("r"))), lit(0L))).head()
+        converged = row.getLong(0) <= stopDeltaMicro
+        dangCarried = Some(row.getLong(1))
       }
-    } catch {
-      case NonFatal(t) =>
-        // no caller holds a hook for a loop that failed: release what it
-        // pinned here, or nothing (not even a drain) ever frees it
-        e.unpersist(blocking = false)
-        nodesF.unpersist(blocking = false)
-        if (!liveCheckpoint.exists(_ eq current)) current.unpersist(blocking = false)
-        liveCheckpoint.foreach(c => CheckpointHandle.release(c))
-        throw t
     }
-    val finalFrame = current
-    val finalCheckpoint = liveCheckpoint
-    val ranks = finalFrame.select(col("node"), col("r").as("rank_micro"))
-    val release: () => Unit = () => {
-      e.unpersist(blocking = false)
-      nodesF.unpersist(blocking = false)
-      // the final frame unpersists only when plain-persisted — if it IS
-      // the live checkpoint its blocks are the data and must stay
-      if (!finalCheckpoint.exists(_ eq finalFrame))
-        finalFrame.unpersist(blocking = false)
-    }
-    val releaseAll: () => Unit = () => {
-      release()
-      finalCheckpoint.foreach(c => CheckpointHandle.release(c))
-    }
-    // the live checkpoint is unreachable from ANY caller's release() —
-    // queue its (invalidating) release so a session that drains at
-    // materialization boundaries never carries it forever
-    finalCheckpoint.foreach { c =>
-      ReleaseRegistry.registerInvalidating("graph.rank_checkpoint")(
-        () => CheckpointHandle.release(c))
-    }
-    RankResult(ranks, i, release, releaseAll)
+    // `release` frees the edge layout, the node set and a persisted final
+    // frame; the final checkpoint (when a round ran) is also queued on
+    // the registry's invalidating tier, since no caller's release() frees it
+    val (release, releaseAll) = s.handOff("graph.rank_checkpoint", e, nodesF, current)
+    RankResult(current.select(col("node"), col("r").as("rank_micro")), i,
+      release, releaseAll)
   }
 
   /** Edge prep without the out-degree column (Katz's contribution is an
     * UNNORMALIZED in-neighbor sum — pre-joining a degree nobody reads
     * would pay an aggregate + join at prep for nothing): dedup, lay out
-    * on `src` once, persist, and count as the barrier that materializes
-    * the layout before the rounds re-read it. Read by Katz's distributed
+    * on `src` once, pin it in `s`, and count as the barrier that
+    * materializes the layout before the rounds re-read it. Read by Katz's distributed
     * rounds and by [[hits]]; Katz's driver-local path gathers the
     * deduplicated pairs without it.
     */
-  private def preparePlain(edges: DataFrame): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct()
-      .repartition(col("src")).persist()
-    e.count() // barrier: materialize before the iteration chain re-reads
-    e
-  }
+  private def preparePlain(s: Pins.Scope, edges: DataFrame): DataFrame =
+    s.materialize(edges.select(col("src"), col("dst")).distinct()
+      .repartition(col("src")))._1
 
   /** Unnormalized contribution: each in-neighbor donates its full score
     * (`Σ_{j→i} r_j` — the Katz recurrence's matrix term). One join + one
@@ -684,7 +646,7 @@ object Graph {
   def katzCentrality(edges: DataFrame, iters: Int = 3,
       alphaNum: Long = 20L, alphaDen: Long = 100L): DataFrame = {
     val res = katzCore(edges, iters, alphaNum, alphaDen)
-    if (res.pinned) ReleaseRegistry.register("graph.katz")(res.release)
+    if (res.pinned) Pins.queue("graph.katz")(res.release)
     res.ranks.select(col("node"), col("rank_micro").as("katz_micro"))
   }
 
@@ -701,10 +663,11 @@ object Graph {
         iterateLocal(pairs, src, dst, (s, _) => new Array[Long](s.length),
           (r, _) => r, iters, alphaNum, alphaDen, stopDeltaMicro = -1L,
           redistributeDangling = false)
-      case _ =>
-        val e = preparePlain(edges)
-        iterateDistributed(e, plainContrib(e), iters, alphaNum, alphaDen,
+      case _ => Pins.scope { s =>
+        val e = preparePlain(s, edges)
+        iterateDistributed(s, e, plainContrib(e), iters, alphaNum, alphaDen,
           stopDeltaMicro = -1L, redistributeDangling = false)
+      }
     }
   }
 
@@ -726,16 +689,18 @@ object Graph {
     * half-step is one equi-join against that fixed layout + one
     * map-side-combined sum; both score tables are |nodes|-bounded and
     * lineage-truncate per round ([[graft.plans.Checkpoints.truncate]]).
+    * The superseded score checkpoints free each half-step; the edge
+    * layout and the final two checkpoints go to the registry (the layout
+    * to the safe tier), and a failed round frees them all.
     */
-  def hits(edges: DataFrame, iters: Int = 2): DataFrame = {
-    import org.apache.spark.sql.graft.CheckpointHandle
+  def hits(edges: DataFrame, iters: Int = 2): DataFrame = Pins.scope { s =>
     require(iters >= 1, s"hits: iters must be >= 1, got $iters")
-    val e = preparePlain(edges)
+    val e = preparePlain(s, edges)
     // loop-invariant role cardinalities (driver scalars, like nNodes in
     // the rank loops)
     val nHub = e.select("src").distinct().count()
     val nAuth = e.select("dst").distinct().count()
-    var h = Checkpoints.truncate(
+    var h = s.truncate(
       e.select(col("src").as("node")).distinct().withColumn("s", lit(Unit_)))
     var hCp = h // the checkpoint backing h (h itself may be a lazy rescale)
     var a: DataFrame = null
@@ -746,10 +711,10 @@ object Graph {
     // (recomputed per read — one integer division, read at most twice) —
     // the old persist → probe → truncate-copy → unpersist paid an extra
     // block-copy job per half-step. Release targets the backing
-    // checkpoint, not the projection (a projection has no handle).
+    // checkpoint, not the projection (a projection is not a pin).
     def halfStep(from: DataFrame, joinKey: String, outKey: String,
         n: Long): (DataFrame, DataFrame) = {
-      val raw = Checkpoints.truncate(
+      val raw = s.truncate(
         e.join(from, e(joinKey) === from("node"))
           .select(e(outKey).as("node"), col("s"))
           .groupBy("node").agg(sum("s").as("s_raw")))
@@ -760,23 +725,18 @@ object Graph {
     }
     for (_ <- 1 to iters) {
       val (aNew, aCpNew) = halfStep(h, "src", "dst", nAuth)
-      if (aCp != null) CheckpointHandle.release(aCp)
+      if (aCp != null) s.release(aCp)
       a = aNew; aCp = aCpNew
       val (hNew, hCpNew) = halfStep(a, "dst", "src", nHub)
-      CheckpointHandle.release(hCp)
+      s.release(hCp)
       h = hNew; hCp = hCpNew
     }
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
-    val (hF, aF) = (h, a)
-    val (hCpF, aCpF) = (hCp, aCp)
-    ReleaseRegistry.registerInvalidating("graph.hits_checkpoint") { () =>
-      CheckpointHandle.release(hCpF); CheckpointHandle.release(aCpF)
-      e.unpersist(blocking = false)
-    }
+    s.keep("graph.hits", e, hCp, aCp)
     nodes
-      .join(hF.select(col("node"), col("s").as("hub_micro")), Seq("node"), "left")
-      .join(aF.select(col("node"), col("s").as("auth_micro")), Seq("node"), "left")
+      .join(h.select(col("node"), col("s").as("hub_micro")), Seq("node"), "left")
+      .join(a.select(col("node"), col("s").as("auth_micro")), Seq("node"), "left")
       .select(col("node"),
         coalesce(col("hub_micro"), lit(0L)).as("hub_micro"),
         coalesce(col("auth_micro"), lit(0L)).as("auth_micro"))
@@ -865,7 +825,7 @@ object Graph {
     */
   def labelPropagate(edges: DataFrame, iters: Int = 3): DataFrame = {
     val (labels, release) = labelPropagateCore(edges, iters)
-    release.foreach(ReleaseRegistry.register("graph.label_prop"))
+    release.foreach(Pins.queue("graph.label_prop"))
     labels
   }
 
@@ -896,10 +856,7 @@ object Graph {
     */
   private[graft] def labelPropagateCore(edges: DataFrame, iters: Int,
       localMaxRows: Long = LocalLoopMaxRows): (DataFrame, Option[() => Unit]) = {
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
+    val und = canonical(edges)
     val doubled = und.unionAll(und.select(col("b").as("a"), col("a").as("b")))
     gatherIntegral(und, localMaxRows / 2) match {
       case Some(Array(a, b)) =>
@@ -920,74 +877,45 @@ object Graph {
           StructType(Seq(nodeField, nodeField.copy(name = "label"))),
           ids, label.map(v => ids(v))),
           None)
-      case _ =>
-        val e = doubled
-          .repartition(col("b")) // the label join probes on b each round
-          .persist()
-        e.count() // barrier: materialize before the rounds re-read it
-        val (labels, release) = labelPropagateDistributed(e, iters)
+      case _ => Pins.scope { s =>
+        // count barrier: materialize before the rounds re-read it; the
+        // label join probes on b each round
+        val (e, _) = s.materialize(doubled.repartition(col("b")))
+        val (labels, release) = labelPropagateDistributed(s, e, iters)
         (labels, Some(release))
+      }
     }
   }
 
-  /** [[labelPropagateCore]]'s distributed rounds over the persisted,
-    * counted doubled edge frame `e`.
+  /** [[labelPropagateCore]]'s distributed rounds over the doubled edge
+    * frame `e`, pinned in `s` and counted; `e` is freed when `s` exits.
     */
-  private def labelPropagateDistributed(e: DataFrame,
+  private def labelPropagateDistributed(s: Pins.Scope, e: DataFrame,
       iters: Int): (DataFrame, () => Unit) = {
-    var labels = e.select(col("a").as("node")).distinct()
-      .select(col("node"), col("node").as("label")).persist()
-    import org.apache.spark.sql.graft.CheckpointHandle
-    var liveCheckpoint: Option[DataFrame] = None
-    // the final round's persisted frame while its count runs
-    var persistedFinal: Option[DataFrame] = None
-    var i = 0
-    try {
-      labels.count()
-      while (i < iters) {
-        val nbrMin = e.join(labels, e("b") === labels("node"))
-          .groupBy(e("a").as("node")).agg(min("label").as("nl"))
-        val stepped = labels.join(nbrMin, Seq("node"), "left")
-          .select(col("node"),
-            least(col("label"), coalesce(col("nl"), col("label"))).as("label"))
-        // INTERMEDIATE rounds materialize in ONE job straight into
-        // constant-depth checkpoint blocks ([[iterateDistributed]]'s r17 round shape —
-        // the old persist → count → truncate-copy paid an extra block-copy
-        // job per round); the FINAL round stays a plain persisted frame so
-        // the returned hook's unpersist is always safe, with its lineage
-        // backed by the last intermediate checkpoint (released only via the
-        // registry's invalidating tier below)
-        val next =
-          if (i < iters - 1) Checkpoints.truncate(stepped)
-          else {
-            val n = stepped.persist(); persistedFinal = Some(n); n.count(); n
-          }
-        if (!liveCheckpoint.exists(_ eq labels)) labels.unpersist()
-        if (i < iters - 1) {
-          liveCheckpoint.foreach(c => CheckpointHandle.release(c))
-          liveCheckpoint = Some(next)
-        }
-        labels = next
-        i += 1
-      }
-    } catch {
-      case NonFatal(t) =>
-        // as in [[iterateDistributed]]: a failed loop frees its own pins
-        e.unpersist(blocking = false)
-        if (!liveCheckpoint.exists(_ eq labels)) labels.unpersist(blocking = false)
-        persistedFinal.foreach(_.unpersist(blocking = false))
-        liveCheckpoint.foreach(c => CheckpointHandle.release(c))
-        throw t
+    var labels = s.materialize(e.select(col("a").as("node")).distinct()
+      .select(col("node"), col("node").as("label")))._1
+    // the last intermediate checkpoint, which backs the final frame
+    var backing: Option[DataFrame] = None
+    for (i <- 0 until iters) {
+      val nbrMin = e.join(labels, e("b") === labels("node"))
+        .groupBy(e("a").as("node")).agg(min("label").as("nl"))
+      val stepped = labels.join(nbrMin, Seq("node"), "left")
+        .select(col("node"),
+          least(col("label"), coalesce(col("nl"), col("label"))).as("label"))
+      // INTERMEDIATE rounds materialize in ONE job straight into
+      // constant-depth checkpoint blocks ([[iterateDistributed]]'s r17 round shape —
+      // the old persist → count → truncate-copy paid an extra block-copy
+      // job per round); the FINAL round stays a plain persisted frame so
+      // the returned hook's unpersist is always safe, with its lineage
+      // backed by the last intermediate checkpoint, which stays pinned
+      // (handed to the registry's invalidating tier below)
+      val last = i == iters - 1
+      val next = if (last) s.materialize(stepped)._1 else s.truncate(stepped)
+      if (last && i > 0) backing = Some(labels) else s.release(labels)
+      labels = next
     }
-    e.unpersist(blocking = false)
-    // the last intermediate checkpoint backs the final frame's lineage —
-    // queue its (invalidating) release for the session host's drain
-    liveCheckpoint.foreach { c =>
-      ReleaseRegistry.registerInvalidating("graph.label_checkpoint")(
-        () => CheckpointHandle.release(c))
-    }
-    val finalLabels = labels
-    (finalLabels, () => finalLabels.unpersist(blocking = false))
+    val (release, _) = s.handOff("graph.label_checkpoint", labels +: backing.toSeq: _*)
+    (labels, release)
   }
 
   /** Community rollup — the materialize-then-release composition pattern
@@ -1012,13 +940,9 @@ object Graph {
     val rollup = labels.groupBy(col("label").as("community"))
       .agg(count(lit(1)).as("n_members"), min("node").as("min_node"),
         max("node").as("max_node"))
+    // materialize BEFORE dropping the label cache
     releaseLabels.fold(rollup) { release =>
-      val pinned = rollup.persist()
-      try pinned.count() // materialize BEFORE dropping the label cache
-      finally release()
-      ReleaseRegistry.register("graph.communities")(
-        () => pinned.unpersist(blocking = false))
-      pinned
+      try Pins.materialize("graph.communities", rollup)._1 finally release()
     }
   }
 
@@ -1039,13 +963,8 @@ object Graph {
     * table for within-community edges, one degree aggregate, and a
     * per-community rollup bounded by community count.
     */
-  def modularity(edges: DataFrame, iters: Int = 3): DataFrame = {
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-      .persist()
-    val m = und.count()
+  def modularity(edges: DataFrame, iters: Int = 3): DataFrame = Pins.scope { s =>
+    val (und, m) = s.materialize(canonical(edges))
     // propagate over the PERSISTED canonical edge list: handing the raw
     // frame to the propagation would run the caller's edge generation
     // (e.g. the co-occurrence self-join) twice — once inside the
@@ -1057,6 +976,9 @@ object Graph {
     // the caller's generation cost, e.g. a wide co-occurrence fanout.)
     val (labels, releaseLabels) = labelPropagateReleasable(
       und.select(col("a").as("src"), col("b").as("dst")), iters)
+    // the label and edge caches drop when the scope exits, after the
+    // result below is materialized
+    s.defer(releaseLabels)
     val inEdges = und
       .join(labels.as("la"), col("a") === col("la.node"))
       .join(labels.as("lb"), col("b") === col("lb.node"))
@@ -1070,17 +992,11 @@ object Graph {
       .groupBy(col("label").as("community"))
       .agg(count(lit(1)).as("n_members"), sum("dg").as("deg_sum"))
     val ds = col("deg_sum").cast("double") / lit(2.0 * m)
-    val out = perC.join(inEdges, Seq("community"), "left")
+    Pins.materialize("graph.modularity", perC.join(inEdges, Seq("community"), "left")
       .select(col("community"), col("n_members"),
         coalesce(col("in_edges"), lit(0L)).as("in_edges"), col("deg_sum"),
         round(coalesce(col("in_edges"), lit(0L)).cast("double") / lit(m.toDouble)
-          - ds * ds, 6).as("q_contrib"))
-      .persist()
-    try out.count() // materialize BEFORE dropping the label/edge caches
-    finally { releaseLabels(); und.unpersist(blocking = false) }
-    ReleaseRegistry.register("graph.modularity")(
-      () => out.unpersist(blocking = false))
-    out
+          - ds * ds, 6).as("q_contrib")))._1
   }
 
   /** Per-node triangle counts via degree-ordered edge orientation (the
@@ -1116,6 +1032,14 @@ object Graph {
     */
   private val PackMaxId = 2147483648L // 2^31
 
+  /** The undirected edge set: each pair once as `(a < b)`, self-loops
+    * dropped.
+    */
+  private def canonical(edges: DataFrame): DataFrame =
+    edges.select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"))
+      .where(col("a") =!= col("b")).distinct()
+
   /** Edge-frame stats in ONE job — the count doubles as the
     * materialization barrier the callers already paid: (nEdges, minId,
     * maxId) over a canonical `(a < b)` edge frame.
@@ -1138,31 +1062,23 @@ object Graph {
     */
   private def denseIdMap(und: DataFrame, label: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val m = und.select(col("a").as("orig"))
+    val (m, n) = Pins.materialize(label, und.select(col("a").as("orig"))
       .union(und.select(col("b").as("orig"))).distinct()
       .select(col("orig"),
-        (row_number().over(Window.orderBy("orig")).cast("long") - 1L).as("nid"))
-      .persist()
-    val n = m.count()
+        (row_number().over(Window.orderBy("orig")).cast("long") - 1L).as("nid")))
     require(n < PackMaxId,
       s"graph id remap ($label): $n nodes exceed the 2^31 packed-key bound")
-    ReleaseRegistry.register(label)(() => m.unpersist(blocking = false))
     m
   }
 
   /** Remapped canonical edges `(a, b)` in dense id space (monotone, so
     * `a < b` still holds), persisted behind a count barrier.
     */
-  private def denseEdges(und: DataFrame, m: DataFrame, label: String): DataFrame = {
-    val d = und
+  private def denseEdges(und: DataFrame, m: DataFrame, label: String): DataFrame =
+    Pins.materialize(label, und
       .join(m.select(col("orig").as("a"), col("nid").as("na")), "a")
       .join(m.select(col("orig").as("b"), col("nid").as("nb")), "b")
-      .select(col("na").as("a"), col("nb").as("b"))
-      .persist()
-    d.count()
-    ReleaseRegistry.register(label)(() => d.unpersist(blocking = false))
-    d
-  }
+      .select(col("na").as("a"), col("nb").as("b")))._1
 
   /** The shared oriented-triangle core: returns `(deg, tri)` — the
     * undirected degree table and per-node triangle counts (nodes with no
@@ -1176,14 +1092,8 @@ object Graph {
     */
   private[graft] def trianglePipeline(edges: DataFrame,
       broadcastMaxRows: Long = 5000000L): (DataFrame, DataFrame) = {
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-      .persist()
-    val (nEdges, minId, maxId) = edgeStats(und)
-    ReleaseRegistry.register("graph.triangles_edges")(
-      () => und.unpersist(blocking = false))
+    val (und, (nEdges, minId, maxId)) =
+      Pins.materializeWith("graph.triangles_edges", canonical(edges))(edgeStats)
     if (minId >= 0 && maxId < PackMaxId)
       trianglesPacked(und, nEdges, broadcastMaxRows)
     else {
@@ -1217,12 +1127,9 @@ object Graph {
     // keys do not guarantee) — measured 3× plan-time on a 1.2M-edge
     // fixture. Persist behind a count barrier; release queued with the
     // registry so hosts drain it at the materialization boundary.
-    val o = keyed.select(least(col("ka"), col("kb")).as("kx"),
-      greatest(col("ka"), col("kb")).as("ky"))
-      .persist()
-    o.count()
-    ReleaseRegistry.register("graph.triangles")(
-      () => o.unpersist(blocking = false))
+    val (o, _) = Pins.materialize("graph.triangles",
+      keyed.select(least(col("ka"), col("kb")).as("kx"),
+        greatest(col("ka"), col("kb")).as("ky")))
     // Closure by SORTED-ADJACENCY INTERSECTION, not wedge expansion: the
     // first-draft e1⋈e2 self-join materialized every oriented wedge
     // (Σ out-deg² rows — 41M at sf0.1 for 1.2M edges) through a full
@@ -1308,14 +1215,8 @@ object Graph {
   def linkPredictionRA(edges: DataFrame, maxHubDegree: Long = 128L,
       topK: Int = 100): DataFrame = {
     require(maxHubDegree >= 2, s"linkPredictionRA: cap must be >= 2")
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-      .persist()
-    val (nEdges, minId, maxId) = edgeStats(und)
-    ReleaseRegistry.register("graph.linkpred_edges")(
-      () => und.unpersist(blocking = false))
+    val (und, (nEdges, minId, maxId)) =
+      Pins.materializeWith("graph.linkpred_edges", canonical(edges))(edgeStats)
     raGuarded(und, nEdges, minId, maxId, maxHubDegree, topK)
   }
 
@@ -1476,9 +1377,10 @@ object Graph {
     * under `graft.checkpoint.dir`): without it the round-r plan nests
     * every earlier round's tree and driver-side re-analysis dominates
     * wall time (measured 10× the parallel compute on the 1.2M-edge
-    * fixture). The parent generation's blocks free as soon as the next
-    * exists; the final generation's (invalidating) release is queued
-    * with [[graft.plans.ReleaseRegistry]].
+    * fixture). The loop runs in one [[graft.plans.Pins.Scope]]: the
+    * parent generation's blocks free as soon as the next exists, a round
+    * that throws frees every generation still pinned, and the final
+    * generation goes to the registry's invalidating tier.
     *
     * `k` is deliberately caller-chosen (no default): a useful core order
     * depends on the graph's degree distribution — derive it from a
@@ -1500,31 +1402,23 @@ object Graph {
     * expensive stage of the composed plan.
     */
   private[operators] def kCoreAlive(edges: DataFrame, k: Int, rounds: Int,
-      broadcastMaxRows: Long): DataFrame = {
-    import org.apache.spark.sql.graft.CheckpointHandle
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-    var alive = Checkpoints.truncate(
+      broadcastMaxRows: Long): DataFrame = Pins.scope { s =>
+    val und = canonical(edges)
+    var alive = s.truncate(
       und.select(col("a").as("x"), col("b").as("y"))
         .union(und.select(col("b").as("x"), col("a").as("y"))))
     for (_ <- 1 to rounds) {
-      val keep = alive.groupBy("x").agg(count(lit(1)).as("dg"))
-        .where(col("dg") >= k).select("x").persist()
       // the probe doubles as keep's materialization barrier, so the
       // degree aggregate runs once per round, not once per semi join
-      val survivors = keep.count()
-      val next = Checkpoints.truncate(
-        peelJoin(alive, keep, survivors <= broadcastMaxRows))
-      keep.unpersist(blocking = false)
-      CheckpointHandle.release(alive)
+      val (keep, survivors) = s.materialize(alive.groupBy("x")
+        .agg(count(lit(1)).as("dg")).where(col("dg") >= k).select("x"))
+      val next = s.truncate(peelJoin(alive, keep, survivors <= broadcastMaxRows))
+      s.release(keep)
+      s.release(alive)
       alive = next
     }
-    val last = alive
-    ReleaseRegistry.registerInvalidating("graph.kcore_checkpoint")(
-      () => CheckpointHandle.release(last))
-    last
+    s.keep("graph.kcore_checkpoint", alive)
+    alive
   }
 
   /** One [[kCore]] peel round's pruning joins, strategy chosen by the
@@ -1551,10 +1445,7 @@ object Graph {
     * beyond the returned scalar.
     */
   def degreeQuantile(edges: DataFrame, p: Double): Int = {
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
+    val und = canonical(edges)
     und.select(col("a").as("node")).union(und.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("dg"))
       .agg(percentile_approx(col("dg"), lit(p), lit(10000)).as("q"))
@@ -1580,10 +1471,7 @@ object Graph {
     * and a single 1-row global aggregate with map-side partials.
     */
   def assortativity(edges: DataFrame): DataFrame = {
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
+    val und = canonical(edges)
     val deg = und.select(col("a").as("node"))
       .union(und.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("dg"))
@@ -1642,22 +1530,18 @@ object Graph {
     * materialization barrier). Per-round lineage truncation via
     * [[graft.plans.Checkpoints.truncate]] (local by default, reliable
     * under `graft.checkpoint.dir`); superseded visited/frontier
-    * generations release as soon as their successor materializes.
+    * generations release as soon as their successor materializes, and
+    * the adjacency and the last frontier when the loop ends.
     */
   def bfsLevels(edges: DataFrame, nSources: Int = 8,
-      maxDepth: Int = 6): DataFrame = {
-    import org.apache.spark.sql.graft.CheckpointHandle
+      maxDepth: Int = 6): DataFrame = Pins.scope { s =>
     require(nSources > 0, s"bfsLevels: nSources must be positive, got $nSources")
     require(maxDepth >= 0, s"bfsLevels: maxDepth must be >= 0, got $maxDepth")
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-    val adj = und.select(col("a").as("x"), col("b").as("y"))
+    val und = canonical(edges)
+    val (adj, _) = s.materialize(und.select(col("a").as("x"), col("b").as("y"))
       .union(und.select(col("b").as("x"), col("a").as("y")))
-      .repartition(col("x")).persist()
-    adj.count()
-    val f0 = Checkpoints.truncate(
+      .repartition(col("x")))
+    val f0 = s.truncate(
       adj.select(col("x").as("node")).distinct()
         .orderBy(col("node")).limit(nSources)
         .select(col("node").as("source"), col("node"), lit(0).as("dist")))
@@ -1667,32 +1551,28 @@ object Graph {
     var done = f0.count() == 0L // empty graph: nothing to expand
     while (d < maxDepth && !done) {
       d += 1
-      val next = Checkpoints.truncate(
+      val next = s.truncate(
         frontier.join(adj, frontier("node") === adj("x"))
           .select(col("source"), col("y").as("node")).distinct()
           .join(visited, Seq("source", "node"), "left_anti")
           .withColumn("dist", lit(d)))
       if (next.count() == 0L) {
-        CheckpointHandle.release(next)
+        s.release(next)
         done = true
       } else {
-        val grown = Checkpoints.truncate(visited.union(next))
-        // superseded generations: the old frontier (= old visited in
-        // round 1 — release exactly once) and the old visited
-        if (frontier ne visited) CheckpointHandle.release(frontier)
-        CheckpointHandle.release(visited)
+        val grown = s.truncate(visited.union(next))
+        // superseded generations: the old frontier (the old visited
+        // itself in round 1) and the old visited
+        s.release(frontier)
+        s.release(visited)
         frontier = next
         visited = grown
       }
     }
-    adj.unpersist(blocking = false)
-    // the last frontier's rows are folded into `visited`, which is an
-    // independent truncated generation — the frontier frame can go now
-    if (frontier ne visited) CheckpointHandle.release(frontier)
-    val out = visited
-    ReleaseRegistry.registerInvalidating("graph.bfs_checkpoint")(
-      () => CheckpointHandle.release(out))
-    out
+    // the last frontier's rows are folded into `visited`, an independent
+    // truncated generation: the frontier goes with the scope
+    s.keep("graph.bfs_checkpoint", visited)
+    visited
   }
 
   /** Sampled harmonic centrality (Eppstein–Wang estimator shape): for
@@ -1735,80 +1615,52 @@ object Graph {
     */
   def personalizedPageRank(edges: DataFrame, nSeeds: Int = 4,
       iters: Int = 3, dampNum: Long = 85L,
-      dampDen: Long = 100L): DataFrame = {
-    import org.apache.spark.sql.graft.CheckpointHandle
+      dampDen: Long = 100L): DataFrame = Pins.scope { s =>
     require(nSeeds > 0,
       s"personalizedPageRank: nSeeds must be positive, got $nSeeds")
-    val e = prepareUniform(edges)
+    val e = prepareUniform(s, edges)
     val contrib = uniformContrib(e)
     val srcs = e.select(col("src")).distinct()
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
     val seedSet = nodes.orderBy(col("node")).limit(nSeeds)
       .select(col("node").as("snode"))
-    val nodesF = nodes.as("n")
+    val (nodesF, nNodes) = s.materialize(nodes.as("n")
       .join(srcs.as("s"), col("n.node") === col("s.src"), "left")
       .join(seedSet, col("n.node") === col("snode"), "left")
       .select(col("n.node").as("node"), col("s.src").isNull.as("dng"),
-        col("snode").isNotNull.as("seed"))
-      .persist()
-    var current: DataFrame = nodesF
-    var liveCheckpoint: Option[DataFrame] = None
-    try {
-      val nNodes = nodesF.count()
-      val nSeedsActual = math.min(nSeeds.toLong, nNodes)
-      // per-seed teleport: two truncating divisions, in this exact order
-      // (the oracle replays the same parenthesization); overflow-checked
-      // like [[rankBase]], so a large dampDen throws instead of wrapping
-      val tele =
+        col("snode").isNotNull.as("seed")))
+    val nSeedsActual = math.min(nSeeds.toLong, nNodes)
+    // per-seed teleport: two truncating divisions, in this exact order
+    // (the oracle replays the same parenthesization); overflow-checked
+    // like [[rankBase]], so a large dampDen throws instead of wrapping
+    val tele =
+      if (nSeedsActual == 0) 0L
+      else Math.multiplyExact(Math.multiplyExact(
+        Math.subtractExact(dampDen, dampNum), nNodes), Unit_) / dampDen /
+        nSeedsActual
+    var current = s.persist(nodesF.withColumn("r", lit(Unit_)))
+    for (_ <- 1 to iters) {
+      val r = current
+      val ct = contrib(r)
+      val dang = r.where(col("dng"))
+        .agg(coalesce(sum(col("r")), lit(0L))).head().getLong(0)
+      val extra =
         if (nSeedsActual == 0) 0L
-        else Math.multiplyExact(Math.multiplyExact(
-          Math.subtractExact(dampDen, dampNum), nNodes), Unit_) / dampDen /
-          nSeedsActual
-      current = nodesF.withColumn("r", lit(Unit_)).persist()
-      for (_ <- 1 to iters) {
-        val r = current
-        val ct = contrib(r)
-        val dang = r.where(col("dng"))
-          .agg(coalesce(sum(col("r")), lit(0L))).head().getLong(0)
-        val extra =
-          if (nSeedsActual == 0) 0L
-          else Math.multiplyExact(dampNum, dang / nSeedsActual) / dampDen
-        // ONE materialization per round ([[iterateDistributed]]'s r17 round shape):
-        // eager truncate into constant-depth checkpoint blocks replaces the
-        // persist → count → truncate-copy → unpersist sequence
-        val next = Checkpoints.truncate(
-          r.select(col("node"), col("dng"), col("seed"))
-            .join(ct, Seq("node"), "left")
-            .select(col("node"), col("dng"), col("seed"),
-              (when(col("seed"), lit(Math.addExact(tele, extra))).otherwise(lit(0L)) +
-                expr(s"($dampNum * coalesce(c, 0L)) div $dampDen")).as("r")))
-        if (!liveCheckpoint.exists(_ eq r)) r.unpersist()
-        liveCheckpoint.foreach(c => CheckpointHandle.release(c))
-        liveCheckpoint = Some(next)
-        current = next
-      }
-    } catch {
-      case NonFatal(t) =>
-        // as in [[iterateDistributed]]: a failed loop frees its own pins
-        e.unpersist(blocking = false)
-        nodesF.unpersist(blocking = false)
-        if (!liveCheckpoint.exists(_ eq current)) current.unpersist(blocking = false)
-        liveCheckpoint.foreach(c => CheckpointHandle.release(c))
-        throw t
+        else Math.multiplyExact(dampNum, dang / nSeedsActual) / dampDen
+      // ONE materialization per round ([[iterateDistributed]]'s r17 round shape):
+      // eager truncate into constant-depth checkpoint blocks replaces the
+      // persist → count → truncate-copy → unpersist sequence
+      current = s.truncate(
+        r.select(col("node"), col("dng"), col("seed"))
+          .join(ct, Seq("node"), "left")
+          .select(col("node"), col("dng"), col("seed"),
+            (when(col("seed"), lit(Math.addExact(tele, extra))).otherwise(lit(0L)) +
+              expr(s"($dampNum * coalesce(c, 0L)) div $dampDen")).as("r")))
+      s.release(r)
     }
-    val fin = current
-    val finCp = liveCheckpoint
-    ReleaseRegistry.register("graph.ppr")(() => {
-      e.unpersist(blocking = false)
-      nodesF.unpersist(blocking = false)
-      if (!finCp.exists(_ eq fin)) fin.unpersist(blocking = false)
-    })
-    finCp.foreach { c =>
-      ReleaseRegistry.registerInvalidating("graph.ppr_checkpoint")(
-        () => CheckpointHandle.release(c))
-    }
-    fin.select(col("node"), col("r").as("rank_micro"))
+    s.keep("graph.ppr", e, nodesF, current)
+    current.select(col("node"), col("r").as("rank_micro"))
   }
 
   /** Multi-source WEIGHTED shortest paths: `rounds` synchronous
@@ -1831,8 +1683,7 @@ object Graph {
     * ~10¹⁰ edges of 10⁹-unit weights per path.
     */
   def shortestPathsWeighted(edges: DataFrame, nSources: Int = 4,
-      rounds: Int = 6): DataFrame = {
-    import org.apache.spark.sql.graft.CheckpointHandle
+      rounds: Int = 6): DataFrame = Pins.scope { s =>
     require(nSources > 0,
       s"shortestPathsWeighted: nSources must be positive, got $nSources")
     require(rounds >= 0,
@@ -1842,17 +1693,16 @@ object Graph {
         greatest(col("src"), col("dst")).as("b"), col("w"))
       .where(col("a") =!= col("b"))
       .groupBy("a", "b").agg(sum("w").as("w"))
-    val adj = und.select(col("a").as("x"), col("b").as("y"), col("w"))
+    val (adj, _) = s.materialize(und.select(col("a").as("x"), col("b").as("y"), col("w"))
       .union(und.select(col("b").as("x"), col("a").as("y"), col("w")))
-      .repartition(col("x")).persist()
-    adj.count()
-    var state = Checkpoints.truncate(
+      .repartition(col("x")))
+    var state = s.truncate(
       adj.select(col("x").as("node")).distinct()
         .orderBy(col("node")).limit(nSources)
         .select(col("node").as("source"), col("node"),
           lit(0L).as("d")))
-    def probe(s: DataFrame): (Long, Long) = {
-      val r = s.agg(coalesce(sum(col("d")), lit(0L)), count(lit(1))).head()
+    def probe(df: DataFrame): (Long, Long) = {
+      val r = df.agg(coalesce(sum(col("d")), lit(0L)), count(lit(1))).head()
       (r.getLong(0), r.getLong(1))
     }
     var sig = probe(state)
@@ -1863,23 +1713,20 @@ object Graph {
       val cand = state.join(adj, state("node") === adj("x"))
         .select(col("source"), col("y").as("node"),
           (col("d") + col("w")).as("d"))
-      val next = Checkpoints.truncate(
+      val next = s.truncate(
         state.unionByName(cand)
           .groupBy("source", "node").agg(min("d").as("d")))
       val nextSig = probe(next)
       if (nextSig == sig) {
-        CheckpointHandle.release(next)
+        s.release(next)
         converged = true
       } else {
-        CheckpointHandle.release(state)
+        s.release(state)
         state = next
         sig = nextSig
       }
     }
-    adj.unpersist(blocking = false)
-    val last = state
-    ReleaseRegistry.registerInvalidating("graph.sssp_checkpoint")(
-      () => CheckpointHandle.release(last))
-    last.select(col("source"), col("node"), col("d").as("dist_cost"))
+    s.keep("graph.sssp_checkpoint", state)
+    state.select(col("source"), col("node"), col("d").as("dist_cost"))
   }
 }

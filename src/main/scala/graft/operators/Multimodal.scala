@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.plans.Pins
 
 /** Multimodal column handling: image/audio/video as opaque `binary` columns
   * with typed metadata, plus decode / feature-extract / frame-sample stages
@@ -1224,11 +1225,10 @@ object Multimodal {
   def audioDupPairs(media: DataFrame, minMatch: Int = 3,
       windowFrames: Int = 64, bands: Int = 16, stubWindows: Int = 4,
       maxBucket: Int = 1024): DataFrame = {
-    val fp = audioFingerprints(media, windowFrames, bands, stubWindows)
-      .select("media_id", "win_idx", "fhash").persist()
-    fp.count() // barrier: one decode pass; only the tiny hash frame pins
-    graft.plans.ReleaseRegistry.register("multimodal.audio_dup_pairs")(
-      () => fp.unpersist(blocking = false))
+    // barrier: one decode pass; only the tiny hash frame pins
+    val (fp, _) = Pins.materialize("multimodal.audio_dup_pairs",
+      audioFingerprints(media, windowFrames, bands, stubWindows)
+        .select("media_id", "win_idx", "fhash"))
     val ok = fp.groupBy("fhash").agg(count(lit(1)).as("nb"))
       .where(col("nb") <= maxBucket).select("fhash")
     val f = fp.join(ok, Seq("fhash")) // AQE broadcasts when small
@@ -1311,11 +1311,10 @@ object Multimodal {
     */
   def videoDupPairs(media: DataFrame, minMatch: Int = 3, cells: Int = 16,
       stubFrames: Int = 4, maxBucket: Int = 1024): DataFrame = {
-    val fp = videoFingerprints(media, cells, stubFrames)
-      .select("media_id", "frame_idx", "fhash").persist()
-    fp.count() // barrier: one decode pass; only the tiny hash frame pins
-    graft.plans.ReleaseRegistry.register("multimodal.video_dup_pairs")(
-      () => fp.unpersist(blocking = false))
+    // barrier: one decode pass; only the tiny hash frame pins
+    val (fp, _) = Pins.materialize("multimodal.video_dup_pairs",
+      videoFingerprints(media, cells, stubFrames)
+        .select("media_id", "frame_idx", "fhash"))
     val ok = fp.groupBy("fhash").agg(count(lit(1)).as("nb"))
       .where(col("nb") <= maxBucket).select("fhash")
     val f = fp.join(ok, Seq("fhash")) // AQE broadcasts when small
@@ -1621,10 +1620,9 @@ object Multimodal {
   def phashDctNearKeep(media: DataFrame, maxHamming: Int = 3,
       bands: Int = 4, maxBucket: Int = 1024, grid: Int = 32): DataFrame = {
     require(grid >= 8, "the top 8x8 coefficient block needs grid >= 8")
-    val feats = gridFeatures(media, grid).persist()
-    feats.count() // barrier: the one decode pass both legs read from
-    graft.plans.ReleaseRegistry.register("multimodal.phash_dct_near_keep")(
-      () => feats.unpersist(blocking = false))
+    // barrier: the one decode pass both legs read from
+    val (feats, _) = Pins.materialize("multimodal.phash_dct_near_keep",
+      gridFeatures(media, grid))
     val pairs = bandedHashPairs(dctHashOfFeatures(feats, grid), 64,
         maxHamming, bands, maxBucket, "multimodal.phash_dct_near_keep.pairs")
       .select(col("media_a").as("a"), col("media_b").as("b"))
@@ -1704,10 +1702,8 @@ object Multimodal {
     * Release of the pinned hash frame queues with the registry.
     */
   def phashDupCounts(media: DataFrame): DataFrame = {
-    val ph = perceptualHash(media).persist()
-    ph.count() // barrier: one decode pass; only the tiny hash frame pins
-    graft.plans.ReleaseRegistry.register("multimodal.phash_dups")(
-      () => ph.unpersist(blocking = false))
+    // barrier: one decode pass; only the tiny hash frame pins
+    val (ph, _) = Pins.materialize("multimodal.phash_dups", perceptualHash(media))
     val counts = ph.groupBy("phash").agg(count(lit(1)).as("nb"))
     ph.join(counts, "phash") // AQE broadcasts the bucket table when small
       .select(col("media_id"), col("phash"), (col("nb") - 1L).as("n_dups"))
@@ -1771,10 +1767,8 @@ object Multimodal {
     require(nBits % bands == 0, s"bands must divide the $nBits phash bits")
     val r = nBits / bands
     val mask = if (r == 64) -1L else (1L << r) - 1
-    val ph = hashes.persist()
-    ph.count() // barrier: one decode pass; only the tiny hash frame pins
-    graft.plans.ReleaseRegistry.register(releaseKey)(
-      () => ph.unpersist(blocking = false))
+    // barrier: one decode pass; only the tiny hash frame pins
+    val (ph, _) = Pins.materialize(releaseKey, hashes)
     val bandStructs = (0 until bands).map(j =>
       struct(lit(j).as("band"),
         shiftright(col("phash"), j * r).bitwiseAND(lit(mask)).as("bh")))
@@ -1824,11 +1818,10 @@ object Multimodal {
     */
   def phashNearKeep(media: DataFrame, maxHamming: Int = 3, bands: Int = 4,
       maxBucket: Int = 1024): DataFrame = {
-    val feats = extractFeatures(dropNullPayloads(media))
-      .select(col("media_id"), col("features")).persist()
-    feats.count() // barrier: the one decode pass both legs read from
-    graft.plans.ReleaseRegistry.register("multimodal.phash_near_keep")(
-      () => feats.unpersist(blocking = false))
+    // barrier: the one decode pass both legs read from
+    val (feats, _) = Pins.materialize("multimodal.phash_near_keep",
+      extractFeatures(dropNullPayloads(media))
+        .select(col("media_id"), col("features")))
     val pairs = bandedHashPairs(packPhash(feats), 16, maxHamming, bands,
         maxBucket, "multimodal.phash_near_keep.pairs")
       .select(col("media_a").as("a"), col("media_b").as("b"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.plans.Pins
 
 /** Relational operator suite: joins (broadcast/semi/anti), window
   * functions, rollup, distinct aggregates, set ops, top-k.
@@ -591,13 +592,9 @@ object Relational {
   def positionByRange(df: DataFrame, keys: Seq[Column],
       releaseLabel: String = "relational.position_by_range"): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
-    val ranged = df
+    val (ranged, _) = Pins.materialize(releaseLabel, df
       .repartitionByRange(par, keys: _*)
-      .withColumn("pid", spark_partition_id())
-      .persist()
-    ranged.count()
-    graft.plans.ReleaseRegistry.register(releaseLabel)(
-      () => ranged.unpersist(blocking = false))
+      .withColumn("pid", spark_partition_id()))
     val offsets = ranged.groupBy("pid").agg(count(lit(1)).as("cnt"))
       .withColumn("off", coalesce(
         sum("cnt").over(

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.plans.Pins
 
 /** Second relational batch: the remaining TPC-H query shapes expressible on
   * the fixture schema (FIXTURES.md — no partsupp, no l_commitdate /
@@ -547,14 +548,11 @@ object RelationalX {
       nBuckets: Int = 10): DataFrame = {
     val par = spark.sparkContext.defaultParallelism
     val keys = Seq(col("l_extendedprice"), col("l_orderkey"), col("l_linenumber"))
-    val ranged = Tables.lineitem(spark, dir)
+    // barrier: both passes must see the same range bounds
+    val (ranged, _) = Pins.materialize("relationalx.eqdepth_ranged", Tables.lineitem(spark, dir)
       .select("l_extendedprice", "l_orderkey", "l_linenumber")
       .repartitionByRange(par, keys: _*)
-      .withColumn("pid", spark_partition_id())
-      .persist()
-    ranged.count() // barrier: both passes must see the same range bounds
-    graft.plans.ReleaseRegistry.register("relationalx.eqdepth_ranged")(
-      () => ranged.unpersist(blocking = false))
+      .withColumn("pid", spark_partition_id()))
     val offsets = ranged.groupBy("pid").agg(count(lit(1)).as("cnt"))
       .withColumn("off", coalesce(
         sum("cnt").over(
@@ -698,10 +696,8 @@ object RelationalX {
     // sides); the table is sources × m rows — persist behind a count
     // barrier so the token explode + register aggregate runs once
     // (pqTopK's pinned-tiny contract, LRU-evictable)
-    val regs = hllRegisters(tok, Seq("source"), "word", p).persist()
-    regs.count()
-    graft.plans.ReleaseRegistry.register("relationalx.hll_overlap_regs")(
-      () => regs.unpersist(blocking = false))
+    val (regs, _) = Pins.materialize("relationalx.hll_overlap_regs",
+      hllRegisters(tok, Seq("source"), "word", p))
     val single = hllEstimate(regs, Seq("source"), p)
       .select(col("source"), col("est_distinct"))
     val srcs = regs.select("source").distinct()
@@ -744,10 +740,7 @@ object RelationalX {
     // grid join) — composed lazily each branch replays the corpus scan +
     // register aggregate. It is days × m tiny rows: persist behind a
     // count barrier (pqTopK's pinned-tiny contract, LRU-evictable)
-    val regs = dayRegisters(events, p).persist()
-    regs.count()
-    graft.plans.ReleaseRegistry.register("relationalx.rolling_regs")(
-      () => regs.unpersist(blocking = false))
+    val (regs, _) = Pins.materialize("relationalx.rolling_regs", dayRegisters(events, p))
     // dense (day, bucket) grid: a bucket absent on some day must still
     // surface earlier days' registers through the window
     val grid = regs.select("day").distinct()
@@ -798,15 +791,12 @@ object RelationalX {
 
   def skylineParts(spark: SparkSession, dir: String): DataFrame = {
     val par = spark.sparkContext.defaultParallelism
-    val perPrice = Tables.part(spark, dir)
+    // barrier: both passes must agree on range bounds
+    val (perPrice, _) = Pins.materialize("relationalx.skyline_ranged", Tables.part(spark, dir)
       .groupBy(col("p_retailprice").as("price"))
       .agg(max("p_size").as("size"))
       .repartitionByRange(par, col("price"))
-      .withColumn("pid", spark_partition_id())
-      .persist()
-    perPrice.count() // barrier: both passes must agree on range bounds
-    graft.plans.ReleaseRegistry.register("relationalx.skyline_ranged")(
-      () => perPrice.unpersist(blocking = false))
+      .withColumn("pid", spark_partition_id()))
     // running max of size over partitions strictly before pid (tiny frame)
     val carry = perPrice.groupBy("pid").agg(max("size").as("pmax"))
       .withColumn("prev", max("pmax").over(

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.plans.Pins
+
 /** Similarity search over an embedding column (`array<float>`): brute-force
   * cosine top-k as the exact baseline, and an LSH-bucketed (random
   * hyperplane / sign-bit) variant as the 100 TB scale path. North-star
@@ -202,11 +204,9 @@ object Similarity {
         round(col("sim") * 10000).cast("long").as("sq"))
     val p = prepared(embeddings)
       .select(col("vec_id").as("nbr_id"), col("v"), col("nrm"))
-    val cand = cand0.join(p, Seq("nbr_id"))
-      .select("query_id", "nbr_id", "sq", "v", "nrm").persist()
-    cand.count() // barrier: one corpus scoring pass feeds all rounds
-    graft.plans.ReleaseRegistry.register("similarity.mmr_cand")(
-      () => cand.unpersist(blocking = false))
+    // count barrier: one corpus scoring pass feeds all rounds
+    val (cand, _) = Pins.materialize("similarity.mmr_cand",
+      cand0.join(p, Seq("nbr_id")).select("query_id", "nbr_id", "sq", "v", "nrm"))
     val x = cand.select(col("query_id"), col("nbr_id").as("a"),
       col("v").as("va"), col("nrm").as("na"))
     val y = cand.select(col("query_id"), col("nbr_id").as("b"),
@@ -639,14 +639,10 @@ object Similarity {
     val muArr = mu
       .agg(array_sort(collect_list(struct(col("i"), col("mu")))).as("ms"))
       .select(transform(col("ms"), e => e("mu")).as("mu"))
-    val xi = p.crossJoin(broadcast(muArr))
+    val (xi, _) = Pins.materialize("similarity.top_pc", p.crossJoin(broadcast(muArr))
       .select(col("vec_id"),
         zip_with(col("v"), col("mu"),
-          (x, m) => round((x - m) * 1e6).cast("long")).as("xi"))
-      .persist()
-    xi.count()
-    graft.plans.ReleaseRegistry.register("similarity.top_pc")(
-      () => xi.unpersist(blocking = false))
+          (x, m) => round((x - m) * 1e6).cast("long")).as("xi")))
 
     val dims = p.select(size(col("v"))).head.getInt(0)
     // v0 = uniform unit direction; 1/8 = 0.125 is exactly representable,
@@ -998,27 +994,26 @@ object Similarity {
     * round's k-row centroid frame persists behind a count barrier (read
     * twice: assignment cross-join + fallback join) and the parent
     * releases; the FINAL table stays pinned for the life of the returned
-    * plan with its release queued on [[graft.plans.ReleaseRegistry]].
+    * plan with its release queued on [[graft.plans.ReleaseRegistry]]. A
+    * round that throws frees every generation still pinned.
     */
   private def lloydCentroids(p: DataFrame, kClusters: Int, iters: Int,
       nearest: DataFrame => DataFrame,
       toCentroid: (org.apache.spark.sql.RelationalGroupedDataset, String,
-        String) => DataFrame): DataFrame = {
-    val seed = toCentroid(p.groupBy((col("vec_id") % kClusters).as("cid")), "v", "c")
-      .persist()
+        String) => DataFrame): DataFrame = Pins.scope { s =>
+    val seed = s.persist(
+      toCentroid(p.groupBy((col("vec_id") % kClusters).as("cid")), "v", "c"))
     val cents = (1 to iters).foldLeft(seed) { (cb, _) =>
       val refined = toCentroid(
         nearest(cb).select(col("m").getField("cid").as("cid"), col("v"))
           .groupBy("cid"), "v", "c2")
-      val next = cb.join(refined, Seq("cid"), "left")
-        .select(col("cid"), coalesce(col("c2"), col("c")).as("c"))
-        .persist()
-      next.count() // materialize before releasing the parent
-      cb.unpersist()
+      // materialize before releasing the parent
+      val (next, _) = s.materialize(cb.join(refined, Seq("cid"), "left")
+        .select(col("cid"), coalesce(col("c2"), col("c")).as("c")))
+      s.release(cb)
       next
     }
-    graft.plans.ReleaseRegistry.register("similarity.kmeans_centroids")(
-      () => cents.unpersist(blocking = false))
+    s.keep("similarity.kmeans_centroids", cents)
     cents
   }
 
@@ -1131,7 +1126,7 @@ object Similarity {
       minSim: Double = 0.6, maxClusterPairs: Long = 10000000L): DataFrame = {
     val (out, release) =
       semDedupReleasable(embeddings, kClusters, iters, minSim, maxClusterPairs)
-    graft.plans.ReleaseRegistry.register("similarity.semdedup")(release)
+    Pins.queue("similarity.semdedup")(release)
     out
   }
 
@@ -1157,7 +1152,7 @@ object Similarity {
     val (out, release) = semDedupFrom(
       kmeansAssignFullWith(embeddings, centroids), embeddings,
       minSim, maxClusterPairs)
-    graft.plans.ReleaseRegistry.register("similarity.semdedup_with")(release)
+    Pins.queue("similarity.semdedup_with")(release)
     out
   }
 
@@ -1165,10 +1160,8 @@ object Similarity {
     * [[semDedupWith]], from an already-built full assignment frame.
     */
   private def semDedupFrom(assigned: DataFrame, embeddings: DataFrame,
-      minSim: Double, maxClusterPairs: Long): (DataFrame, () => Unit) = {
-    val a = assigned
-      .select(col("vec_id"), col("cid"), col("v"), col("nrm"))
-      .persist()
+      minSim: Double, maxClusterPairs: Long): (DataFrame, () => Unit) = Pins.scope { s =>
+    val a = s.persist(assigned.select(col("vec_id"), col("cid"), col("v"), col("nrm")))
     // Σcluster² probe: k rows of bounded metadata, read from the cache
     val sizes = a.groupBy("cid").agg(count(lit(1)).as("n")).collect()
       .map(r => r.getLong(0) -> r.getLong(1))
@@ -1203,7 +1196,7 @@ object Similarity {
       .join(dropped.withColumn("hit", lit(true)), Seq("vec_id"), "left")
       .select(col("vec_id"), col("cid"),
         coalesce(col("hit"), lit(false)).as("dropped"))
-    (out, () => a.unpersist(blocking = false))
+    (out, s.handOff("similarity.semdedup_assign", a)._1)
   }
 
   /** Persist an IVF index: the deterministic centroid table plus the
@@ -1594,10 +1587,8 @@ object Similarity {
     // safe unpersist point here — its release is queued with the session
     // ReleaseRegistry; long-lived sessions can also train once via
     // pqCodebooks and use the prebuilt-codebook path instead
-    val cb = pqCodebooks(embeddings, dims, m, codes).persist()
-    cb.count()
-    graft.plans.ReleaseRegistry.register("similarity.pq_codebook")(
-      () => cb.unpersist(blocking = false))
+    val (cb, _) = Pins.materialize("similarity.pq_codebook",
+      pqCodebooks(embeddings, dims, m, codes))
     val enc = pqEncodeWith(embeddings, cb, dims, m)
     val qsubs = prepared(queries).select(col("vec_id").as("query_id"),
       posexplode(array((0 until m).map(s =>
@@ -1638,10 +1629,8 @@ object Similarity {
     // codebook trains once (persist+count) and feeds encode + LUT — same
     // pinned-tiny-frame contract as pqTopK (no safe unpersist point;
     // LRU-evictable; prebuilt-codebook path for long-lived sessions)
-    val cb = pqCodebooks(embeddings, dims, m, codes).persist()
-    cb.count()
-    graft.plans.ReleaseRegistry.register("similarity.pq_codebook")(
-      () => cb.unpersist(blocking = false))
+    val (cb, _) = Pins.materialize("similarity.pq_codebook",
+      pqCodebooks(embeddings, dims, m, codes))
     val enc = pqEncodeWith(embeddings, cb, dims, m).join(assignedCell, "vec_id")
     val q = prepared(queries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.plans.Pins
 
 /** Text operators: the reference's three benchmark apps (word count,
   * aggregation, inverted index — `/root/reference/doc/CourseReport'14/
@@ -1103,12 +1104,9 @@ object TextOps {
       .drop("sp")
     // two-pass global prefix sums of the bench indicator → segment ids
     val par = ranged.sparkSession.sparkContext.defaultParallelism
-    val rp = withG.repartitionByRange(par, col("pos"))
-      .withColumn("pid", spark_partition_id())
-      .persist()
-    rp.count()
-    graft.plans.ReleaseRegistry.register("text.decontam_sub_ranged")(
-      () => rp.unpersist(blocking = false))
+    val (rp, _) = Pins.materialize("text.decontam_sub_ranged",
+      withG.repartitionByRange(par, col("pos"))
+        .withColumn("pid", spark_partition_id()))
     val offs = rp.groupBy("pid").agg(sum("side").as("cnt"))
       .withColumn("offUp", coalesce(
         sum("cnt").over(Window.orderBy("pid")
@@ -1135,7 +1133,7 @@ object TextOps {
       broadcast(lastPos.select((col("mp") + 1).as("pos"), col("pid").as("bpid"))),
       Seq("pos"))
       .select(col("bpid").as("pid"), col("g").as("g_bnd"))
-    val base = rp.join(broadcast(offs), "pid")
+    val (base, _) = Pins.materialize("text.decontam_sub_base", rp.join(broadcast(offs), "pid")
       .withColumn("segUp", sum("side").over(wUp) + col("offUp"))
       .withColumn("segDn", sum("side").over(wDn) + col("offDn"))
       .withColumn("g2", lead("g", 1).over(wUp))
@@ -1145,11 +1143,7 @@ object TextOps {
         when(col("side") === 1, lit(null).cast("long")).otherwise(col("g")))
       .withColumn("mg2",
         when(col("side") === 1, lit(null).cast("long")).otherwise(col("g2")))
-      .select("pos", "doc_id", "side", "sl", "pid", "segUp", "segDn", "mg", "mg2")
-      .persist()
-    base.count()
-    graft.plans.ReleaseRegistry.register("text.decontam_sub_base")(
-      () => base.unpersist(blocking = false))
+      .select("pos", "doc_id", "side", "sl", "pid", "segUp", "segDn", "mg", "mg2"))
     // Segmented cumulative mins run pid-LOCAL (windows partitioned by
     // (pid, seg) — bounded by the range-partition size even when a
     // degenerate benchmark makes one segment span the whole corpus) and
@@ -1311,14 +1305,10 @@ object TextOps {
     val spark = docs.sparkSession
     val par = spark.sparkContext.defaultParallelism
     val keys = Seq(col("entropy_bits"), col("doc_id"))
-    val ranged = unigramEntropy(docs)
+    val (ranged, _) = Pins.materialize("textops.curriculum_ranged", unigramEntropy(docs)
       .select("doc_id", "entropy_bits")
       .repartitionByRange(par, keys: _*)
-      .withColumn("pid", spark_partition_id())
-      .persist()
-    ranged.count()
-    graft.plans.ReleaseRegistry.register("textops.curriculum_ranged")(
-      () => ranged.unpersist(blocking = false))
+      .withColumn("pid", spark_partition_id()))
     val offsets = ranged.groupBy("pid").agg(count(lit(1)).as("cnt"))
       .withColumn("off", coalesce(
         sum("cnt").over(
@@ -1713,15 +1703,11 @@ object TextOps {
     import org.apache.spark.sql.expressions.Window
     val spark = docs.sparkSession
     val par = spark.sparkContext.defaultParallelism
-    val ranged = docs
+    val (ranged, _) = Pins.materialize("textops.pack_ranged", docs
       .select(col("doc_id"),
         size(split(col("text"), "\\s+")).cast("long").as("n_tokens"))
       .repartitionByRange(par, col("doc_id"))
-      .withColumn("pid", spark_partition_id())
-      .persist()
-    ranged.count()
-    graft.plans.ReleaseRegistry.register("textops.pack_ranged")(
-      () => ranged.unpersist(blocking = false))
+      .withColumn("pid", spark_partition_id()))
     val offsets = ranged.groupBy("pid").agg(sum("n_tokens").as("cnt"))
       .withColumn("off", coalesce(
         sum("cnt").over(
@@ -2485,9 +2471,9 @@ object TextOps {
     * (bounded driver state: `nMerges` rows total) — the same
     * scalar-probe discipline as the rank loops' convergence tests.
     */
-  def bpeMerges(docs: DataFrame, nMerges: Int = 8): DataFrame = {
+  def bpeMerges(docs: DataFrame, nMerges: Int = 8): DataFrame = Pins.scope { s =>
     val spark = docs.sparkSession
-    var vocab = graft.plans.Checkpoints.truncate(
+    var vocab = s.truncate(
       wordCount(docs)
         .where(length(col("word")) >= 2 && !col("word").contains(BpeSep))
         .select(col("cnt"),
@@ -2511,13 +2497,13 @@ object TextOps {
         val w = winner.head
         val (l, rr, n) = (w.getString(0), w.getString(1), w.getLong(2))
         merges += ((r, l, rr, n))
-        val next = graft.plans.Checkpoints.truncate(
+        val next = s.truncate(
           vocab.withColumn("s", bpeApplyOne(split(col("s"), BpeSep), l, rr)))
-        org.apache.spark.sql.graft.CheckpointHandle.release(vocab)
+        s.release(vocab)
         vocab = next
       }
     }
-    org.apache.spark.sql.graft.CheckpointHandle.release(vocab)
+    // the last vocabulary generation goes with the scope
     import spark.implicits._
     merges.toSeq.toDF("merge_rank", "lhs", "rhs", "n_occ")
       .select(col("merge_rank").cast("int").as("merge_rank"),
@@ -2781,13 +2767,9 @@ object TextOps {
     */
   private[graft] def unigramEm(docs: DataFrame, seedMulti: Int, keepMulti: Int,
       maxPieceLen: Int, maxWordLen: Int,
-      maxAlphabet: Int = 2000000): (Seq[(String, Long)], DataFrame) = {
-    val wc = wordCount(docs)
-      .where(length(col("word")) <= maxWordLen && !col("word").contains(BpeSep))
-      .persist()
-    wc.count()
-    graft.plans.ReleaseRegistry.register("text.unigram_wc")(
-      () => wc.unpersist(blocking = false))
+      maxAlphabet: Int = 2000000): (Seq[(String, Long)], DataFrame) = Pins.scope { s =>
+    val (wc, _) = Pins.materialize("text.unigram_wc", wordCount(docs)
+      .where(length(col("word")) <= maxWordLen && !col("word").contains(BpeSep)))
     val seeds = wc.select(col("cnt"), explode(expr(
       s"flatten(transform(sequence(1, length(word)), i -> " +
         s"transform(sequence(i, least(length(word), i + ${maxPieceLen - 1})), " +
@@ -2812,18 +2794,18 @@ object TextOps {
     val total0 = seed0.map(_.getLong(1)).sum.toDouble
     val lp0 = seed0.toSeq.map(r =>
       r.getString(0) -> math.round(math.log(r.getLong(1) / total0) * 1e6))
-    val u1p = wc.select(col("cnt"), explode(
+    // two consumers: the usage map and the prune top-K
+    val u1p = s.persist(wc.select(col("cnt"), explode(
       graft.functions.TextFunctions.unigramSegment(col("word"), lp0, maxPieceLen))
       .as("piece"))
-      .groupBy("piece").agg(sum("cnt").as("u"))
-      .persist() // two consumers: the usage map and the prune top-K
+      .groupBy("piece").agg(sum("cnt").as("u")))
     val u1 = u1p.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val keptMulti = multiSeeds.select("piece")
       .join(u1p, Seq("piece"), "left")
       .select(col("piece"), coalesce(col("u"), lit(0L)).as("u"))
       .orderBy(col("u").desc, col("piece")).limit(keepMulti)
       .collect().map(_.getString(0))
-    u1p.unpersist(blocking = false)
+    s.release(u1p)
     val chars = seed0.map(_.getString(0))
       .filter(p => p.codePointCount(0, p.length) == 1)
     val v1 = (chars ++ keptMulti).toSeq

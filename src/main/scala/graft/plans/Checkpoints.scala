@@ -43,12 +43,13 @@ object Checkpoints {
 
   /** Eagerly materialize `df` with truncated lineage: reliable
     * `checkpoint()` when [[DirKey]] is set, `localCheckpoint` otherwise.
-    * Either way the result is a constant-depth `LogicalRDD` plan —
-    * releasable via
-    * [[org.apache.spark.sql.graft.CheckpointHandle.release]] (which is a
-    * no-op for the reliable form: its data is checkpoint FILES, cleaned
-    * with the SparkContext, not persisted blocks). A materialization
-    * that fails leaves no RDD of its own persisted
+    * Either way the result is a constant-depth `LogicalRDD` plan.
+    * Operators reach this only through [[Pins.Scope.truncate]], which
+    * tracks the result as a checkpoint pin: the scope frees a superseded
+    * generation by its handle (a no-op for the reliable form, whose data
+    * is checkpoint FILES cleaned with the SparkContext), and hands the
+    * final one to the registry's invalidating tier or to the caller. A
+    * materialization that fails leaves no RDD of its own persisted
     * ([[org.apache.spark.sql.graft.CheckpointHandle.releasingOnFailure]]).
     */
   def truncate(df: DataFrame): DataFrame = {

@@ -2,6 +2,8 @@ package graft.plans
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.util.control.NonFatal
+
 /** Session-scoped registry of release hooks for state that operators pin
   * (persisted frames, localCheckpoint blocks, broadcasts) on behalf of the
   * plans they return.
@@ -18,24 +20,27 @@ import java.util.concurrent.ConcurrentLinkedQueue
   * `dedup_resolve` run times grew 12.5 → 31 → 48 s across three invocations
   * in one session before this existed).
   *
-  * Contract: builders register the hooks they already construct at plan-
-  * construction time; the session host drains AFTER materializing the
-  * results of the current batch of work (`Bench`/`Verify` drain after every
-  * sink write; services drain at request boundaries). Two tiers:
+  * Contract: operators never register here themselves; [[Pins]] does,
+  * at plan-construction time, for every pin it hands off (one-shot pins,
+  * a scope's [[Pins.Scope.keep]] and the checkpoints behind a
+  * [[Pins.Scope.handOff]]). The session host drains AFTER materializing
+  * the results of the current batch of work (`Bench`/`Verify` drain after
+  * every sink write; services drain at request boundaries). Two tiers:
   *
   *  - [[register]] — SAFE hooks: running them unpersists cached frames whose
   *    lineage stays intact, so a later re-read of the returned plan is slow
   *    but correct.
-  *  - [[registerInvalidating]] — hooks that free `localCheckpoint` blocks.
-  *    A checkpoint's blocks ARE the data (lineage is truncated), so after
+  *  - [[registerInvalidating]] — hooks that free checkpoint blocks. A
+  *    checkpoint's blocks ARE the data (lineage is truncated), so after
   *    running these the plans that read them CANNOT be re-executed — the
   *    caller must be done with every outstanding result, or re-invoke the
   *    builder. `drain(full = false)` leaves this tier queued.
   *
-  * Hooks must be idempotent (unpersist already is) and are run inside a
-  * catch-all: a failing hook must never poison the drain of the rest.
-  * Queue, not map: the same logical operator invoked twice registers twice,
-  * and both invocations' state must release.
+  * Hooks must be idempotent (unpersist already is). A hook that throws a
+  * non-fatal exception is reported on stderr with its label and the drain
+  * goes on with the rest; a fatal error propagates, with the hooks not yet
+  * run still queued. Queue, not map: the same logical operator invoked
+  * twice registers twice, and both invocations' state must release.
   */
 object ReleaseRegistry {
   final case class Hook(label: String, invalidating: Boolean, run: () => Unit)
@@ -71,17 +76,21 @@ object ReleaseRegistry {
   def drain(full: Boolean = true): Int = {
     var ran = 0
     val requeue = List.newBuilder[Hook]
-    var h = hooks.poll()
-    while (h != null) {
-      if (h.invalidating && !full) requeue += h
-      else {
-        try h.run() catch { case _: Throwable => () }
-        ran += 1
+    try {
+      var h = hooks.poll()
+      while (h != null) {
+        if (h.invalidating && !full) requeue += h
+        else {
+          try h.run() catch {
+            case NonFatal(t) => Console.err.println(
+              s"ReleaseRegistry: release hook '${h.label}' failed: " +
+                s"${t.getClass.getName}: ${t.getMessage}")
+          }
+          ran += 1
+        }
+        h = hooks.poll()
       }
-      h = hooks.poll()
-    }
-    // re-queue skipped invalidating hooks in their original order
-    requeue.result().foreach(hooks.add)
+    } finally requeue.result().foreach(hooks.add) // skipped hooks, in order
     ran
   }
 }

@@ -710,16 +710,23 @@ class GraphSpec extends SparkSpec {
   }
 
   /** Drains the registry and returns a check that every RDD persisted
-    * since is gone again (waiting out `blocking = false` unpersists).
+    * since is gone again (waiting out `blocking = false` unpersists), and
+    * that the cache manager holds no more entries than before: a frame
+    * persisted but never materialized (its barrier failed) shows there
+    * and not among the persisted RDDs.
     */
   private def persistedBaseline(): String => Unit = {
     graft.plans.ReleaseRegistry.drain()
+    def cached = org.apache.spark.sql.graft.CacheEntries(spark)
     val before = spark.sparkContext.getPersistentRDDs.keySet
+    val cachedBefore = cached
     def leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     what => {
       val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
       while (leaked.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
       assert(leaked.isEmpty, s"$what left RDDs pinned: $leaked")
+      assert(cached <= cachedBefore,
+        s"$what left ${cached - cachedBefore} cache-manager entries")
     }
   }
 
@@ -786,6 +793,22 @@ class GraphSpec extends SparkSpec {
     failsLoudlyAndFreesPins("personalizedPageRank") {
       Graph.personalizedPageRank(edges, 1, 3, 10000000000000L, 10000000000001L)
         .collect()
+    }
+  }
+
+  test("shortestPathsWeighted: an overflow in a round or in the prep frees its pins") {
+    // round 2 relaxes 1 → 3 at 2⁶² + 2⁶²: the checkpoint job of that round
+    // throws with the adjacency and round 1's checkpoint pinned
+    val rounds = Seq((1L, 2L, 1L << 62), (2L, 3L, 1L << 62), (3L, 4L, 1L))
+      .toDF("src", "dst", "w")
+    failsLoudlyAndFreesPins("shortestPathsWeighted, round 2") {
+      Graph.shortestPathsWeighted(rounds, nSources = 1).collect()
+    }
+    // both directions canonicalize to (1, 2): the per-pair sum overflows
+    // at the adjacency's count barrier, before anything is materialized
+    val prep = Seq((1L, 2L, 1L << 62), (2L, 1L, 1L << 62)).toDF("src", "dst", "w")
+    failsLoudlyAndFreesPins("shortestPathsWeighted, prep") {
+      Graph.shortestPathsWeighted(prep, nSources = 1).collect()
     }
   }
 

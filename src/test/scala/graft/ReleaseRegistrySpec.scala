@@ -1,7 +1,8 @@
 package graft
 
 import graft.operators.{CorpusPipeline, Dedup, Graph}
-import graft.plans.ReleaseRegistry
+import graft.plans.{Pins, ReleaseRegistry}
+import org.apache.spark.sql.graft.CacheEntries
 
 /** The session-lifecycle contract: operators queue release hooks for the
   * state they pin; a host that drains after materializing never accumulates
@@ -63,10 +64,100 @@ class ReleaseRegistrySpec extends SparkSpec {
   test("a throwing hook does not poison the drain of the rest") {
     ReleaseRegistry.drain()
     var ok = false
-    ReleaseRegistry.register("boom")(() => throw new RuntimeException("x"))
+    ReleaseRegistry.register("boom")(() => throw new IllegalStateException("x"))
     ReleaseRegistry.register("fine")(() => ok = true)
-    assert(ReleaseRegistry.drain() === 2)
+    val err = new java.io.ByteArrayOutputStream()
+    val ran = Console.withErr(new java.io.PrintStream(err, true))(ReleaseRegistry.drain())
+    assert(ran === 2)
     assert(ok)
+    // the failure is reported, with the hook's label and the exception
+    assert(err.toString.contains(
+      "release hook 'boom' failed: java.lang.IllegalStateException: x"), err.toString)
+    assert(!err.toString.contains("fine"))
+  }
+
+  /** The RDD ids persisted now, and the cache manager's entry count. */
+  private def pinState = (spark.sparkContext.getPersistentRDDs.keySet,
+    CacheEntries(spark))
+
+  /** Waits until no RDD persisted since `before` remains pinned (the
+    * releases unpersist with `blocking = false`) and the cache manager
+    * holds no more entries than it did.
+    */
+  private def awaitReleased(before: (collection.Set[Int], Int), what: String): Unit = {
+    def leaked = spark.sparkContext.getPersistentRDDs.keySet -- before._1
+    val deadline = System.nanoTime + 10L * 1000 * 1000 * 1000
+    while (leaked.nonEmpty && System.nanoTime < deadline) Thread.sleep(50)
+    assert(leaked.isEmpty, s"$what left RDDs pinned: $leaked")
+    assert(CacheEntries(spark) <= before._2,
+      s"$what left a cache-manager entry")
+  }
+
+  test("Pins: a barrier pin queues one safe hook; a failing one queues none") {
+    ReleaseRegistry.drain()
+    val before = pinState
+    val df = spark.range(0, 100, 1, 2).toDF("x")
+    val (pinned, n) = Pins.materialize("pin.ok", df.where($"x" % 2 === 0))
+    assert(n === 50L)
+    assert(ReleaseRegistry.pendingLabels === Seq("pin.ok"))
+    assert(spark.sparkContext.getPersistentRDDs.size > before._1.size)
+    assert(ReleaseRegistry.drain(full = false) === 1) // the safe tier
+    awaitReleased(before, "a drained pin")
+    assert(pinned.count() === 50L) // lineage intact: recomputes
+    // the barrier materializes the frame, then throws: nothing queued,
+    // nothing left pinned, the barrier's own exception propagates
+    val err = intercept[IllegalStateException] {
+      Pins.materializeWith("pin.fail", df.where($"x" > 10)) { p =>
+        p.count(); throw new IllegalStateException("barrier")
+      }
+    }
+    assert(err.getMessage === "barrier")
+    assert(ReleaseRegistry.pending === 0)
+    awaitReleased(before, "a failed barrier")
+  }
+
+  test("Pins: a scope whose body throws frees its checkpoint and its persisted frame") {
+    ReleaseRegistry.drain()
+    val before = pinState
+    val df = spark.range(0, 100, 1, 2).toDF("x")
+    intercept[ArithmeticException] {
+      Pins.scope { s =>
+        val cp = s.truncate(df.select(($"x" * 3).as("y")))
+        val (p, n) = s.materialize(cp.where($"y" > 30))
+        assert(n === 89L && p.count() === 89L)
+        assert(spark.sparkContext.getPersistentRDDs.size >= before._1.size + 2)
+        throw new ArithmeticException("round failed")
+      }
+    }
+    assert(ReleaseRegistry.pending === 0)
+    awaitReleased(before, "a failed scope")
+    // normal exit frees what was neither released nor handed off
+    val n = Pins.scope(s => s.materialize(df)._2 + s.truncate(df).count())
+    assert(n === 200L)
+    assert(ReleaseRegistry.pending === 0)
+    awaitReleased(before, "a finished scope")
+  }
+
+  test("Pins: a handed-off checkpoint lands in the invalidating tier") {
+    ReleaseRegistry.drain()
+    val before = pinState
+    val df = spark.range(0, 10, 1, 2).toDF("x")
+    val (kept, (release, releaseAll)) = Pins.scope { s =>
+      val k = s.truncate(df)
+      s.keep("cp.kept", k)
+      val persisted = s.materialize(df.where($"x" > 4))._1
+      (k, s.handOff("cp.hooked", s.truncate(df.where($"x" < 4)), persisted))
+    }
+    assert(ReleaseRegistry.pendingLabels === Seq("cp.kept", "cp.hooked"))
+    // the safe-tier drain leaves both checkpoints queued and readable
+    assert(ReleaseRegistry.drain(full = false) === 0)
+    assert(ReleaseRegistry.pending === 2)
+    release() // the persisted frame only
+    assert(kept.count() === 10L)
+    releaseAll()
+    assert(ReleaseRegistry.drain() === 2)
+    assert(ReleaseRegistry.pending === 0)
+    awaitReleased(before, "released checkpoints")
   }
 
   test("soak 20x: graph + resolve invocations return the RDD registry to baseline") {
