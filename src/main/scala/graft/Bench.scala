@@ -67,6 +67,19 @@ object Bench {
     }.toMap
   }
 
+  /** `body`, or None when it throws a non-fatal exception, which is then
+    * written to `err` as `BENCH: <what> failed: <class>: <message>` so that
+    * no failed run, re-run or artifact read passes silently. Fatal errors
+    * (out of memory, interrupts) propagate.
+    */
+  private[graft] def loudly[A](what: String,
+      err: java.io.PrintStream = System.err)(body: => A): Option[A] =
+    try Some(body) catch {
+      case NonFatal(t) =>
+        err.println(s"BENCH: $what failed: ${t.getClass.getName}: ${t.getMessage}")
+        None
+    }
+
   /** A failure as an artifact field: `{"error":"<class>: <message>"}`. */
   private[graft] def errorJson(t: Throwable): String = {
     import org.json4s._
@@ -159,13 +172,14 @@ object Bench {
     * child runs the full warmup + adaptive-sampling methodology on just
     * the flagged query and skips the artifact write. Child stderr flows
     * through to ours; stdout is captured and parsed. Returns None when
-    * the child fails, times out, or prints no median — the artifact then
+    * the child fails, times out, or prints no median (a failure to start
+    * or read the child is written to stderr) — the artifact then
     * records verdict "unknown" rather than silently dropping the flag.
     */
   private[graft] def isolatedRerun(name: String, sfDir: String, cpus: String,
       timeoutMinutes: Long = 20): Option[Double] = {
     import scala.jdk.CollectionConverters._
-    try {
+    loudly(s"isolated re-run of $name") {
       val javaBin = new java.io.File(new java.io.File(
         System.getProperty("java.home"), "bin"), "java").getAbsolutePath
       val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
@@ -202,7 +216,7 @@ object Bench {
         finally killer.cancel()
       if (!exited) { p.destroyForcibly(); () }
       medianFromChildOutput(out, name)
-    } catch { case _: Throwable => None }
+    }.flatten
   }
 
   def main(args: Array[String]): Unit = {
@@ -311,7 +325,7 @@ object Bench {
       System.gc()
       def timeOne(): Double = {
         val t0 = System.nanoTime()
-        val ok = try { materialize(name); true } catch { case _: Throwable => false }
+        val ok = loudly(s"$name, timed run")(materialize(name)).isDefined
         if (ok) (System.nanoTime() - t0) / 1e9 else Double.NaN
       }
       // per-query warmup IMMEDIATELY before timing (JIT, codegen cache,
@@ -322,8 +336,9 @@ object Bench {
       var nRows = -1L
       val warm = {
         val t0 = System.nanoTime()
-        val ok = try { nRows = materializeCounting(name); true }
-          catch { case _: Throwable => false }
+        val ok = loudly(s"$name, warm-up run") {
+          nRows = materializeCounting(name)
+        }.isDefined
         if (ok) (System.nanoTime() - t0) / 1e9 else Double.NaN
       }
       val pastHard = elapsedSec >= deadlineSec
@@ -388,9 +403,10 @@ object Bench {
     // isolated re-run — in the same window — "confirms" pure noise
     // (r14: substring_dedup).
     val prevArtifact = java.nio.file.Paths.get("tools/bench_full.json")
-    val prevArtifactTxt: Option[String] = try {
-      Some(new String(java.nio.file.Files.readAllBytes(prevArtifact), "UTF-8"))
-    } catch { case _: Throwable => None }
+    val prevArtifactTxt: Option[String] =
+      loudly(s"reading the committed artifact $prevArtifact") {
+        new String(java.nio.file.Files.readAllBytes(prevArtifact), "UTF-8")
+      }
     // same-core gate: an 8-core run's medians vs a 32-thread artifact
     // measure the core count, not the code (r16: four false "confirmed"
     // verdicts in the driver's c8 scaling run). Cross-core runs skip the

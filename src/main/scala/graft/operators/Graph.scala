@@ -33,13 +33,15 @@ import graft.plans.Pins
   * stop. Label propagation ([[labelPropagateReleasable]]) has the same
   * round shape.
   *
-  * Small graphs skip the edge layout and the per-round jobs: each loop
-  * first gathers its deduplicated pair frame straight off the dedup in
-  * one job ([[gatherIntegral]]), and when that frame has at most
-  * [[LocalLoopMaxRows]] rows of integral, non-null ids, every round runs
-  * on the driver over primitive arrays with the same integer recurrence,
-  * so the two paths return bit-identical frames (see [[iterateLocal]]).
-  * Only above the gate is the `src`-partitioned, persisted layout built.
+  * Small graphs skip the dedup, the edge layout and the per-round jobs:
+  * each loop first gathers its RAW edge stream in one job
+  * ([[gatherIntegral]]; no shuffle of its own), and when that stream has
+  * at most [[LocalLoopMaxRows]] rows of integral, non-null ids, the
+  * driver dedups the pairs ([[localGraph]]: one sort of the endpoint ids,
+  * one of the packed dense pairs) and runs every round over primitive
+  * arrays with the same integer recurrence, so the two paths return
+  * bit-identical frames (see [[iterateLocal]]). Only above the gate are
+  * the dedup and the `src`-partitioned, persisted layout built.
   *
   * Lifecycle: every pin goes through [[graft.plans.Pins]]. A loop runs in
   * one [[graft.plans.Pins.Scope]]: each round frees its superseded
@@ -56,22 +58,24 @@ object Graph {
   /** One PageRank unit in micro-units. */
   val Unit_ : Long = 1000000L
 
-  /** Row cap on the gathered edge frame for the driver-local rounds; above
-    * it the rounds run as distributed jobs. It counts the deduplicated
-    * `(src, dst)` pairs of the rank loops (before any degree join, so a
-    * pair with a null id counts too) and the DOUBLED undirected pairs of
-    * label propagation (each canonical pair once per direction: that loop
-    * gathers the canonical pairs against half the cap). The gather never
-    * ships more than this many rows to the driver. Set just above the
-    * largest graph measured on both paths: at
-    * sf0.1 (587k trade edges for pagerank, 2.39M doubled co-purchase edges
-    * for label propagation; 4 local cores, 7 GB heap) the local rounds
-    * were 1.3–2.2× faster in two back-to-back pairs of runs (median warm
-    * pagerank 4.7 / 3.7 s vs 9.6 / 6.2 s, label propagation 6.0 / 5.7 s vs
-    * 13.0 / 7.5 s), the JVM's peak heap was in the same range on both
-    * paths (the edge build dominates it), and the result held on the
-    * driver was about 1 MB. The collected columns
-    * are transient: 8 bytes per row and column, plus the dense-id arrays.
+  /** Row cap on the gathered edge stream for the driver-local rounds;
+    * above it the rounds run as distributed jobs. It counts RAW rows, before
+    * any dedup: the `(src, dst)` (or `(src, dst, w)`) rows of the rank
+    * loops, duplicates and null ids included, and for label propagation
+    * the canonical `(least, greatest)` rows without self-loops, DOUBLED
+    * (the distributed rounds read each pair once per direction: that loop
+    * gathers against half the cap). The gather never ships more than this
+    * many rows to the driver. At sf0.1 the trade graph has 600,000 raw
+    * rows (586,871 distinct pairs) and the co-purchase graph 1,199,575
+    * canonical rows (1,196,000 distinct), 4% under the half cap of
+    * 1,250,000, so both stay local. Set just above the largest graph
+    * measured on both paths: at sf0.1 (4 local cores, 7 GB heap) the local
+    * rounds were 1.3–2.2× faster in two back-to-back pairs of runs (median
+    * warm pagerank 4.7 / 3.7 s vs 9.6 / 6.2 s, label propagation 6.0 /
+    * 5.7 s vs 13.0 / 7.5 s), the JVM's peak heap was in the same range on
+    * both paths (the edge build dominates it), and the result held on the
+    * driver was about 1 MB. The collected columns are transient: 8 bytes
+    * per row and column, plus the dense-id and packed-pair arrays.
     */
   private[graft] val LocalLoopMaxRows: Long = 2500000L
 
@@ -147,10 +151,10 @@ object Graph {
   private[graft] def pageRankCore(edges: DataFrame, iters: Int,
       dampNum: Long, dampDen: Long, stopDeltaMicro: Long,
       localMaxRows: Long = LocalLoopMaxRows): RankResult = {
-    val pairs = edges.select(col("src"), col("dst")).distinct()
-    gatherIntegral(pairs, localMaxRows) match {
+    val raw = edges.select(col("src"), col("dst"))
+    gatherIntegral(raw, localMaxRows) match {
       case Some(Array(src, dst)) =>
-        iterateLocal(pairs, src, dst, outDegrees,
+        iterateLocal(raw, localGraph(src, dst), outDegrees,
           (r, od) => r / od, iters, dampNum, dampDen, stopDeltaMicro)
       case _ => Pins.scope { s =>
         val e = prepareUniform(s, edges)
@@ -177,10 +181,11 @@ object Graph {
     * Runs through the SAME loops as uniform PageRank (only the
     * contribution expression differs), so it inherits the one-job round
     * with per-round lineage truncation, the convergence support and the
-    * driver-local path for small graphs: the gate gathers the per-pair
-    * weight sums, and the driver derives `Σw` and `wn` from them with the
-    * same overflow-checked integer math. Returns a [[RankResult]] with
-    * release hooks.
+    * driver-local path for small graphs: the gate gathers the raw
+    * `(src, dst, w)` rows, and the driver sums `w` per pair, then derives
+    * `Σw` and `wn`, with the same overflow-checked integer math (a per-pair
+    * sum that overflows throws on both paths). Returns a [[RankResult]]
+    * with release hooks.
     */
   def pageRankWeighted(edges: DataFrame, iters: Int = 3,
       dampNum: Long = 85L, dampDen: Long = 100L): RankResult =
@@ -190,14 +195,14 @@ object Graph {
   private[graft] def pageRankWeightedCore(edges: DataFrame, iters: Int,
       dampNum: Long, dampDen: Long,
       localMaxRows: Long = LocalLoopMaxRows): RankResult = {
-    val pairs = weightedPairs(edges)
-    gatherIntegral(pairs, localMaxRows) match {
+    val raw = edges.select(col("src"), col("dst"), col("w"))
+    gatherIntegral(raw, localMaxRows) match {
       case Some(Array(src, dst, w)) =>
-        iterateLocal(pairs, src, dst, (s, n) => normalizedWeights(s, w, n),
+        iterateLocal(raw, localGraph(src, dst, Some(w)), normalizedWeights,
           (r, wn) => Math.multiplyExact(r, wn) / 1000000L,
           iters, dampNum, dampDen, stopDeltaMicro = -1L)
       case _ => Pins.scope { s =>
-        val e = prepareWeighted(s, pairs)
+        val e = prepareWeighted(s, weightedPairs(edges))
         iterateDistributed(s, e,
           r => e.join(r, e("src") === r("node"))
             .select(col("dst").as("node"), expr("(r * wn) div 1000000L").as("c"))
@@ -207,7 +212,9 @@ object Graph {
     }
   }
 
-  /** `(src, dst, w)` with the weights of duplicate pairs summed. */
+  /** `(src, dst, w)` with the weights of duplicate pairs summed (the
+    * driver-local path sums them in [[localGraph]]).
+    */
   private def weightedPairs(edges: DataFrame): DataFrame =
     edges.select(col("src"), col("dst"), col("w"))
       .groupBy("src", "dst").agg(sum("w").as("w"))
@@ -242,8 +249,8 @@ object Graph {
     * each edge's out-degree (loop-invariant — joining it INSIDE the loop
     * would re-pay an aggregate + join every iteration), lay out on `src`
     * once, persist. Only the distributed rounds read this layout; the
-    * driver-local path derives `od` from the gathered pairs instead
-    * ([[outDegrees]]).
+    * driver-local path dedups the gathered rows and derives `od` from
+    * them instead ([[localGraph]], [[outDegrees]]).
     *
     * Exchange order matters (guide §2.4 — share one exchange): the
     * repartition on `src` sits directly ON the deduped set, so the
@@ -361,25 +368,33 @@ object Graph {
     Gathered(n, hasNull = false, if (out == null) null else out.map(_.result()))
   }
 
-  /** Each edge's out-degree `od` (as [[prepareUniform]] joins it in) from
-    * the dense source index of every deduplicated pair.
-    */
-  private def outDegrees(src: Array[Int], nNodes: Int): Array[Long] = {
-    val od = new Array[Long](nNodes)
-    src.foreach(v => od(v) += 1)
-    src.map(od(_))
+  /** Each pair's out-degree `od` (as [[prepareUniform]] joins it in). */
+  private def outDegrees(g: LocalGraph): Array[Long] = {
+    val od = new Array[Long](g.ids.length)
+    var k = 0
+    while (k < g.src.length) { od(g.src(k)) += 1; k += 1 }
+    val out = new Array[Long](g.src.length)
+    k = 0
+    while (k < out.length) { out(k) = od(g.src(k)); k += 1 }
+    out
   }
 
-  /** Each edge's `wn = (w·10⁶) div Σw` (as [[prepareWeighted]] derives
+  /** Each pair's `wn = (w·10⁶) div Σw` (as [[prepareWeighted]] derives
     * it, `Σw` over the source's out-edges), overflow-checked like Spark's
     * ANSI arithmetic on the distributed path.
     */
-  private def normalizedWeights(src: Array[Int], w: Array[Long],
-      nNodes: Int): Array[Long] = {
-    val sw = new Array[Long](nNodes)
+  private def normalizedWeights(g: LocalGraph): Array[Long] = {
+    val (src, w) = (g.src, g.w)
+    val sw = new Array[Long](g.ids.length)
     var k = 0
     while (k < src.length) { sw(src(k)) = Math.addExact(sw(src(k)), w(k)); k += 1 }
-    Array.tabulate(src.length)(k => Math.multiplyExact(w(k), Unit_) / sw(src(k)))
+    val out = new Array[Long](src.length)
+    k = 0
+    while (k < out.length) {
+      out(k) = Math.multiplyExact(w(k), Unit_) / sw(src(k))
+      k += 1
+    }
+    out
   }
 
   /** Sorted distinct ids of `a ++ b`, and each endpoint's index among them.
@@ -392,11 +407,72 @@ object Graph {
     System.arraycopy(a, 0, all, 0, a.length)
     System.arraycopy(b, 0, all, a.length, b.length)
     java.util.Arrays.sort(all)
-    var n = 0
-    for (v <- all) if (n == 0 || all(n - 1) != v) { all(n) = v; n += 1 }
-    val ids = java.util.Arrays.copyOf(all, n)
-    def index(x: Array[Long]) = x.map(v => java.util.Arrays.binarySearch(ids, v))
+    val ids = java.util.Arrays.copyOf(all, uniqueSorted(all))
+    def index(x: Array[Long]): Array[Int] = {
+      val out = new Array[Int](x.length)
+      var k = 0
+      while (k < x.length) { out(k) = java.util.Arrays.binarySearch(ids, x(k)); k += 1 }
+      out
+    }
     (ids, index(a), index(b))
+  }
+
+  /** Moves the distinct values of the sorted `xs` to its front, in order,
+    * and returns how many there are.
+    */
+  private def uniqueSorted(xs: Array[Long]): Int = {
+    var n = 0
+    var k = 0
+    while (k < xs.length) {
+      if (n == 0 || xs(n - 1) != xs(k)) { xs(n) = xs(k); n += 1 }
+      k += 1
+    }
+    n
+  }
+
+  /** A graph on the driver: `ids(v)` is dense node `v`'s original id, and
+    * `(src(k), dst(k))` the distinct pairs over dense ids in `(src, dst)`
+    * order, with `w(k)` their summed weights (empty when unweighted).
+    */
+  private[graft] final case class LocalGraph(ids: Array[Long],
+      src: Array[Int], dst: Array[Int], w: Array[Long])
+
+  /** The rank loops' driver-side dedup of a gathered raw edge stream: what
+    * `distinct()` (or, given weights, [[weightedPairs]]) computes on the
+    * distributed path. The endpoint ids are sorted once into dense ids
+    * ([[denseIds]]); each pair then packs into one long
+    * `srcDense << 32 | dstDense` (dense ids are non-negative ints, so the
+    * packing orders by `(src, dst)` and never collides, whatever the
+    * original ids), and the packed pairs are sorted and kept unique. With
+    * weights, each raw row adds its `w` to its pair's sum with
+    * `Math.addExact`, so a per-pair sum that overflows throws as Spark's
+    * ANSI `sum` does.
+    */
+  private[graft] def localGraph(srcIds: Array[Long], dstIds: Array[Long],
+      weights: Option[Array[Long]] = None): LocalGraph = {
+    val (ids, src, dst) = denseIds(srcIds, dstIds)
+    def pack(k: Int): Long = (src(k).toLong << 32) | dst(k).toLong
+    val keys = new Array[Long](src.length)
+    var k = 0
+    while (k < keys.length) { keys(k) = pack(k); k += 1 }
+    java.util.Arrays.sort(keys)
+    val m = uniqueSorted(keys)
+    val (ps, pd) = (new Array[Int](m), new Array[Int](m))
+    k = 0
+    while (k < m) { ps(k) = (keys(k) >>> 32).toInt; pd(k) = keys(k).toInt; k += 1 }
+    val w = weights match {
+      case None => Array.emptyLongArray
+      case Some(raw) =>
+        val sums = new Array[Long](m)
+        k = 0
+        while (k < raw.length) {
+          val p = java.util.Arrays.binarySearch(keys, 0, m, pack(k))
+          sums(p) = Math.addExact(sums(p), raw(k))
+          k += 1
+        }
+        sums
+    }
+    LocalGraph(ids, ps, pd, w)
   }
 
   /** A driver-local loop's result as a one-partition frame: row `v` is
@@ -423,9 +499,9 @@ object Graph {
   }
 
   /** The rank loops' driver-local rounds, run when [[gatherIntegral]]
-    * shipped the deduplicated pairs `(src, dst)` of `pairs` (an integral,
-    * null-free frame within the gate). The ids are mapped to dense ints,
-    * `aux(srcIndex, nNodes)` derives each edge's third operand on the
+    * shipped the raw rows of `raw` (an integral, null-free frame within
+    * the gate) and [[localGraph]] deduplicated them into `g`.
+    * `aux(g)` derives each pair's third operand on the
     * driver (`od`, `wn` or nothing — what the distributed prep joins in),
     * and every round runs over primitive arrays with the same integer
     * recurrence as [[iterateDistributed]]: `contrib(r, aux)` per edge
@@ -440,20 +516,22 @@ object Graph {
     * release hooks are no-ops and nothing is registered with
     * [[graft.plans.ReleaseRegistry]] (`pinned` is false).
     */
-  private def iterateLocal(pairs: DataFrame, srcIds: Array[Long],
-      dstIds: Array[Long], aux: (Array[Int], Int) => Array[Long],
+  private def iterateLocal(raw: DataFrame, g: LocalGraph,
+      aux: LocalGraph => Array[Long],
       contrib: (Long, Long) => Long, iters: Int, dampNum: Long,
       dampDen: Long, stopDeltaMicro: Long,
       redistributeDangling: Boolean = true): RankResult = {
     // node column exactly as the distributed rank table types it
     // (analysis only, no job)
-    val nodeField = pairs.select(col("src").as("node"))
-      .union(pairs.select(col("dst").as("node"))).schema.head
-    val (ids, src, dst) = denseIds(srcIds, dstIds)
-    val auxOf = aux(src, ids.length)
+    val nodeField = raw.select(col("src").as("node"))
+      .union(raw.select(col("dst").as("node"))).schema.head
+    val (ids, src, dst) = (g.ids, g.src, g.dst)
+    val auxOf = aux(g)
     val n = ids.length
-    val dng = Array.fill(n)(true)
-    src.foreach(v => dng(v) = false)
+    val dng = new Array[Boolean](n)
+    java.util.Arrays.fill(dng, true)
+    var k = 0
+    while (k < src.length) { dng(src(k)) = false; k += 1 }
     def dangMass(r: Array[Long]): Long = {
       var m = 0L
       var v = 0
@@ -461,14 +539,15 @@ object Graph {
       m
     }
     val base = rankBase(dampNum, dampDen)
-    var r = Array.fill(n)(Unit_)
+    var r = new Array[Long](n)
+    java.util.Arrays.fill(r, Unit_)
     var i = 0
     var converged = false
     while (i < iters && !converged) {
       i += 1
       val share = if (!redistributeDangling || n == 0) 0L else dangMass(r) / n
       val c = new Array[Long](n)
-      var k = 0
+      k = 0
       while (k < src.length) {
         c(dst(k)) = Math.addExact(c(dst(k)), contrib(r(src(k)), auxOf(k)))
         k += 1
@@ -492,7 +571,7 @@ object Graph {
       }
       r = next
     }
-    val ranks = oneTaskFrame(pairs.sparkSession,
+    val ranks = oneTaskFrame(raw.sparkSession,
       StructType(Seq(nodeField, StructField("rank_micro", LongType))), ids, r)
     RankResult(ranks, i, () => (), pinned = false)
   }
@@ -610,8 +689,8 @@ object Graph {
     * would pay an aggregate + join at prep for nothing): dedup, lay out
     * on `src` once, pin it in `s`, and count as the barrier that
     * materializes the layout before the rounds re-read it. Read by Katz's distributed
-    * rounds and by [[hits]]; Katz's driver-local path gathers the
-    * deduplicated pairs without it.
+    * rounds and by [[hits]]; Katz's driver-local path gathers the raw
+    * pairs and dedups them on the driver instead.
     */
   private def preparePlain(s: Pins.Scope, edges: DataFrame): DataFrame =
     s.materialize(edges.select(col("src"), col("dst")).distinct()
@@ -640,7 +719,7 @@ object Graph {
     * Scale shape: identical to [[pageRank]] — the shared rank
     * loops (edges partitioned+persisted once, rank table the only moving
     * state, one eager-checkpoint job per round; driver-local rounds over
-    * the gathered pairs for small graphs), minus the one dangling-mass job per round the
+    * the gathered raw pairs for small graphs), minus the one dangling-mass job per round the
     * `redistributeDangling=false` switch removes.
     */
   def katzCentrality(edges: DataFrame, iters: Int = 3,
@@ -657,10 +736,10 @@ object Graph {
       alphaDen: Long, localMaxRows: Long = LocalLoopMaxRows): RankResult = {
     require(alphaNum > 0 && alphaNum < alphaDen,
       s"katz: need 0 < alpha < 1, got $alphaNum/$alphaDen")
-    val pairs = edges.select(col("src"), col("dst")).distinct()
-    gatherIntegral(pairs, localMaxRows) match {
+    val raw = edges.select(col("src"), col("dst"))
+    gatherIntegral(raw, localMaxRows) match {
       case Some(Array(src, dst)) =>
-        iterateLocal(pairs, src, dst, (s, _) => new Array[Long](s.length),
+        iterateLocal(raw, localGraph(src, dst), g => new Array[Long](g.src.length),
           (r, _) => r, iters, alphaNum, alphaDen, stopDeltaMicro = -1L,
           redistributeDangling = false)
       case _ => Pins.scope { s =>
@@ -768,11 +847,18 @@ object Graph {
     * Per-order fanout is C(items, 2), bounded by order width.
     *
     * Shape: ONE map-side-combined exchange on the order key builds each
-    * order's sorted part set, and the pairs expand in-array (i < j over
-    * the sorted set, so `src < dst` and per-order uniqueness hold by
-    * construction) — no (ok, pk) distinct, no order-key self-join. The
-    * first-draft distinct → self-join → distinct form paid 3 exchanges
-    * plus a join for the identical edge multiset.
+    * order's part set, and the pairs expand per order by exploding
+    * the set twice and keeping `src < dst` (the set is distinct, so that
+    * is one row per pair, and per-order uniqueness holds by construction)
+    * — no (ok, pk) distinct, no order-key self-join. The first-draft
+    * distinct → self-join → distinct form paid 3 exchanges plus a join for
+    * the identical edge multiset. Both explodes and the filter are
+    * whole-stage code-generated; the earlier in-array expansion
+    * (`flatten(transform(ps, (x, i) -> transform(slice(…), y ->
+    * named_struct(…))))`) emitted half the rows but ran interpreted, per
+    * row: lambda variables, a `slice` copy and a struct per pair, which
+    * was most of label propagation's gather job in profiles
+    * (`ArrayTransform.eval`, `Slice.nullSafeEval`, `CreateNamedStruct.eval`).
     *
     * Contract: rows are per-(order, pair) — a pair bought together in
     * k orders appears k times. Every graph consumer canonicalizes its
@@ -784,12 +870,10 @@ object Graph {
   def coOccurrenceEdges(s: SparkSession, dir: String): DataFrame =
     graft.Tables.lineitem(s, dir)
       .groupBy(col("l_orderkey"))
-      .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
-      .select(explode(expr(
-        "flatten(transform(ps, (x, i) -> " +
-          "transform(slice(ps, i + 2, size(ps) - i - 1), y -> " +
-          "named_struct('src', x, 'dst', y))))")).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      .agg(collect_set(col("l_partkey")).as("ps"))
+      .select(col("ps"), explode(col("ps")).as("src"))
+      .select(col("src"), explode(col("ps")).as("dst"))
+      .where(col("src") < col("dst"))
 
   /** The supplier→customer trade graph with transacted value as the edge
     * weight (cents, summed per pair) — the input [[pageRankWeighted]]
@@ -834,16 +918,19 @@ object Graph {
     * materializing; lineage stays intact, so a later recompute is slow
     * but correct).
     *
-    * Same gate as the rank loops: the canonical undirected pairs are
-    * gathered straight off their dedup ([[gatherIntegral]], one job, no
-    * layout, no persist), and when their doubled count is at most
+    * Same gate as the rank loops: the canonical `(least, greatest)` rows
+    * without self-loops are gathered raw, before any dedup
+    * ([[gatherIntegral]], one job, no shuffle of its own, no layout, no
+    * persist), and when their doubled count is at most
     * [[LocalLoopMaxRows]] with integral, non-null ids, the min-label
     * rounds run on the driver over dense int ids (monotone in the
-    * original ids, so the minima agree), each pair read in both
-    * directions. The labels come back as a one-partition frame with the
-    * distributed path's column names and types, and the hook is a no-op.
-    * Above the gate the doubled frame is laid out on `b`, persisted and
-    * counted for the distributed rounds.
+    * original ids, so the minima agree), each row read in both
+    * directions. The driver does not dedup the rows: a minimum is
+    * idempotent, so a duplicate pair changes no label, and skipping the
+    * dedup saves the pair sort. The labels come back as a one-partition
+    * frame with the distributed path's column names and types, and the
+    * hook is a no-op. Above the gate the rows are deduplicated, doubled,
+    * laid out on `b`, persisted and counted for the distributed rounds.
     */
   def labelPropagateReleasable(edges: DataFrame,
       iters: Int = 3): (DataFrame, () => Unit) = {
@@ -856,13 +943,14 @@ object Graph {
     */
   private[graft] def labelPropagateCore(edges: DataFrame, iters: Int,
       localMaxRows: Long = LocalLoopMaxRows): (DataFrame, Option[() => Unit]) = {
-    val und = canonical(edges)
-    val doubled = und.unionAll(und.select(col("b").as("a"), col("a").as("b")))
-    gatherIntegral(und, localMaxRows / 2) match {
+    val rows = canonicalRows(edges)
+    gatherIntegral(rows, localMaxRows / 2) match {
       case Some(Array(a, b)) =>
-        val nodeField = doubled.schema("a").copy(name = "node")
+        val nodeField = rows.schema("a").copy(name = "node")
         val (ids, ai, bi) = denseIds(a, b)
-        var label = Array.range(0, ids.length)
+        var label = new Array[Int](ids.length)
+        var v = 0
+        while (v < label.length) { label(v) = v; v += 1 }
         for (_ <- 0 until iters) {
           val next = label.clone()
           var k = 0
@@ -873,11 +961,16 @@ object Graph {
           }
           label = next
         }
-        (oneTaskFrame(und.sparkSession,
+        val labelIds = new Array[Long](ids.length)
+        v = 0
+        while (v < labelIds.length) { labelIds(v) = ids(label(v)); v += 1 }
+        (oneTaskFrame(rows.sparkSession,
           StructType(Seq(nodeField, nodeField.copy(name = "label"))),
-          ids, label.map(v => ids(v))),
+          ids, labelIds),
           None)
       case _ => Pins.scope { s =>
+        val und = rows.distinct()
+        val doubled = und.unionAll(und.select(col("b").as("a"), col("a").as("b")))
         // count barrier: materialize before the rounds re-read it; the
         // label join probes on b each round
         val (e, _) = s.materialize(doubled.repartition(col("b")))
@@ -973,7 +1066,9 @@ object Graph {
     // distinct over an already-distinct cached frame. (Isolated sf0.1
     // medians 6.62 → 6.40 s — propagation dominates locally, but the
     // duplicate generation is pure waste at any scale and grows with
-    // the caller's generation cost, e.g. a wide co-occurrence fanout.)
+    // the caller's generation cost, e.g. a wide co-occurrence fanout.
+    // The driver-local propagation gathers `und` as it is, with no
+    // distinct at all.)
     val (labels, releaseLabels) = labelPropagateReleasable(
       und.select(col("a").as("src"), col("b").as("dst")), iters)
     // the label and edge caches drop when the scope exits, after the
@@ -1036,9 +1131,16 @@ object Graph {
     * dropped.
     */
   private def canonical(edges: DataFrame): DataFrame =
+    canonicalRows(edges).distinct()
+
+  /** [[canonical]] before its dedup: one `(a, b)` row per input edge that
+    * is not a self-loop, duplicates kept (the driver-local label
+    * propagation gathers these).
+    */
+  private def canonicalRows(edges: DataFrame): DataFrame =
     edges.select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
+      .where(col("a") =!= col("b"))
 
   /** Edge-frame stats in ONE job — the count doubles as the
     * materialization barrier the callers already paid: (nEdges, minId,

@@ -167,4 +167,18 @@ class BenchGuardSpec extends AnyFunSuite {
     assert((parsed \ "error") === org.json4s.JString(
       "java.lang.IllegalStateException: no \"edges\"\nat all"))
   }
+
+  test("a failed run, re-run or artifact read is written out with its class and message") {
+    val buf = new java.io.ByteArrayOutputStream()
+    val err = new java.io.PrintStream(buf, true, "UTF-8")
+    assert(Bench.loudly("q1, timed run", err)(42) === Some(42))
+    assert(buf.size() === 0)
+    assert(Bench.loudly("q1, timed run", err)(
+      throw new IllegalStateException("no such table")) === None)
+    assert(buf.toString("UTF-8").trim ===
+      "BENCH: q1, timed run failed: java.lang.IllegalStateException: no such table")
+    // fatal errors are not a failed run: they stop the bench
+    intercept[InterruptedException](
+      Bench.loudly("q1, timed run", err)(throw new InterruptedException("stop")))
+  }
 }

@@ -882,10 +882,73 @@ class GraphSpec extends SparkSpec {
       "labelPropagateCore" -> (gate =>
         Graph.labelPropagateCore(edges, 3, gate)._2.foreach(_())))
     for ((name, run) <- loops) {
-      // the distinct's shuffle stage and the gather: nothing else
-      assert(jobsOf(Long.MaxValue)(run) === ((2, 0)), name)
+      // the gather over the raw edges and nothing else: the dedup runs on
+      // the driver, so no shuffle stage runs ahead of it
+      assert(jobsOf(Long.MaxValue)(run) === ((1, 0)), name)
       // the shut gate builds the persisted layout (the listener sees it)
       assert(jobsOf(0L)(run)._2 > 0, s"$name, gate shut")
+    }
+  }
+
+  // ---- the driver-local dedup ----
+
+  /** Raw `(src, dst, w)` rows with duplicates in both orientations,
+    * self-loops, ids at 2³¹ − 1, 2³¹ and 2³¹ + 1, negative ids and ids at
+    * ±3·2³² (their low 32 bits are 0, so packing original ids instead of
+    * dense ones would collide them with 0).
+    */
+  private val DedupRows: Edges = {
+    val (lo, mid, hi, far) = ((1L << 31) - 1, 1L << 31, (1L << 31) + 1, 3L << 32)
+    Seq((1L, mid, 3L), (mid, 1L, 4L), (1L, mid, 5L), (-5L, -5L, 2L),
+      (far, lo, 7L), (hi, -5L, 1L), (far, lo, 1L), (-far, far, 2L),
+      (far, -far, 6L), (lo, lo, 9L), (0L, hi, 1L), (hi, -5L, 8L))
+  }
+
+  test("localGraph: the driver dedup matches distinct and the per-pair weight sums") {
+    def pairs(g: Graph.LocalGraph) =
+      g.src.indices.map(k => (g.ids(g.src(k)), g.ids(g.dst(k))))
+    val (src, dst, w) = DedupRows.unzip3
+    val sums = DedupRows.groupBy(r => (r._1, r._2)).toSeq
+      .map { case ((a, b), rs) => (a, b, rs.map(_._3).sum) }.sorted
+    val weighted = Graph.localGraph(src.toArray, dst.toArray, Some(w.toArray))
+    assert(weighted.ids.toSeq === (src ++ dst).distinct.sorted)
+    // in (src, dst) order: the dense ids are monotone in the original ones
+    assert(pairs(weighted).zip(weighted.w).map { case ((a, b), s) => (a, b, s) } === sums)
+    val plain = Graph.localGraph(src.toArray, dst.toArray)
+    assert(pairs(plain) === sums.map(r => (r._1, r._2)) && plain.w.isEmpty)
+    val empty = Graph.localGraph(Array.empty, Array.empty, Some(Array.empty))
+    assert(Seq(empty.ids.length, empty.src.length, empty.dst.length,
+      empty.w.length) === Seq(0, 0, 0, 0))
+    // every loop returns the same frame with the dedup on either path
+    val loops = Seq[(String, (Edges, Long) => (org.apache.spark.sql.DataFrame, () => Unit))](
+      "pageRank" -> ((g, gate) =>
+        hooked(Graph.pageRankCore(plainEdges(g), 3, 85L, 100L, -1L, gate))),
+      "pageRankWeighted" -> ((g, gate) =>
+        hooked(Graph.pageRankWeightedCore(edgeFrame(g), 3, 85L, 100L, gate))),
+      "katz" -> ((g, gate) => hooked(Graph.katzCore(plainEdges(g), 3, 20L, 100L, gate))),
+      "labelPropagate" -> ((g, gate) => {
+        val (labels, release) = Graph.labelPropagateCore(plainEdges(g), 3, gate)
+        (labels, release.getOrElse(() => ()))
+      }))
+    for ((name, run) <- loops; g <- Seq(DedupRows, Seq.empty)) {
+      val ((local, lrel), (dist, drel)) = (run(g, Long.MaxValue), run(g, 0L))
+      assert(typesOf(local) === typesOf(dist) && rowsOf(local) === rowsOf(dist),
+        s"$name on ${g.size} rows")
+      lrel(); drel()
+      graft.plans.ReleaseRegistry.drain()
+    }
+  }
+
+  private def hooked(r: Graph.RankResult) = (r.ranks, r.releaseAll)
+
+  test("localGraph: a per-pair weight sum that overflows throws on both paths") {
+    // each weight fits, their per-pair sum 2⁶² + 2⁶² does not
+    val over = Seq((1L, 2L, 1L << 62), (3L, 2L, 1L), (1L, 2L, 1L << 62))
+    val (src, dst, w) = over.unzip3
+    intercept[ArithmeticException](
+      Graph.localGraph(src.toArray, dst.toArray, Some(w.toArray)))
+    for (gate <- Seq(Long.MaxValue, 0L)) failsLoudlyAndFreesPins(s"gate $gate") {
+      Graph.pageRankWeightedCore(edgeFrame(over), 3, 85L, 100L, gate).ranks.collect()
     }
   }
 }
